@@ -198,7 +198,15 @@ def shingles_raw(docs: DataFrame) -> DataFrame:
     aggregate over a multiset equals the min over its set, so MinHash
     signatures never need the distinct. Use shingle_table (below) only
     where set semantics matter (sizes, exact-Jaccard intersections)."""
-    toks = docs.select("doc_id", words("text").alias("t")).where(
+    return token_shingles(docs.select("doc_id", words("text").alias("toks")))
+
+
+def token_shingles(toked: DataFrame) -> DataFrame:
+    """shingles_raw over an already-tokenized (doc_id, toks) frame,
+    `toks` being the `words` array of the text. The tokens-in entry
+    point for callers that hold that array anyway (the pipeline's
+    quality gate computes it), so the text is split once."""
+    toks = toked.select("doc_id", F.col("toks").alias("t")).where(
         F.size("t") >= SHINGLE_K
     )
     return toks.select(
@@ -226,7 +234,14 @@ def shingle_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, h = md5(shingle)) WITH duplicates — still a narrow
     explode. The hash is taken in the map stage, so nothing downstream
     ever shuffles, groups, or joins on the shingle string itself."""
-    return shingles_raw(docs).select("doc_id", F.md5("shingle").alias("h"))
+    return token_shingle_hashes(docs.select("doc_id", words("text").alias("toks")))
+
+
+def token_shingle_hashes(toked: DataFrame) -> DataFrame:
+    """shingle_hashes from an already-tokenized (doc_id, toks) frame
+    (see token_shingles): the same (doc_id, h) multiset as
+    shingle_hashes over the text the tokens came from."""
+    return token_shingles(toked).select("doc_id", F.md5("shingle").alias("h"))
 
 
 # 60-bit shingle id: integer value of the first 15 hex chars of

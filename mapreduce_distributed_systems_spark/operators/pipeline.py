@@ -6,10 +6,14 @@
       -> near-dup removal   (MinHash-LSH pairs, drop the higher doc_id)
       -> corpus stats per source (docs kept, tokens, chars)
 
-One declarative plan: Catalyst fuses the quality gate into the scan,
-the dedup stages reuse the shingle/signature pipeline from
-operators/dedup.py, and the only shuffles are the two dedup groupings
-plus the final per-source aggregate. This is the composition a 100 TB
+One declarative plan: a corpus that scans as fewer partitions than
+cores (one parquet row group is one task) is first hash-spread on
+doc_id (sources.spread_partitions) so the per-document text work runs
+on every core; the text is tokenized once, by the quality gate, and
+the dedup stages shingle that token array through the
+shingle/signature pipeline from operators/dedup.py. Past the spread,
+the only shuffles are the two dedup groupings plus the final
+per-source aggregate. This is the composition a 100 TB
 pretraining-corpus job actually runs; every stage is the tested
 operator, and the whole pipeline is oracle-checked end-to-end.
 
@@ -33,10 +37,11 @@ from mapreduce_distributed_systems_spark.operators.dedup import (
     minhash_signatures,
     shingle_hashes,
     shingle_ids_from_hashes,
+    token_shingle_hashes,
 )
 from mapreduce_distributed_systems_spark.operators.wordcount import WC_ORACLE
 from mapreduce_distributed_systems_spark.plans.registry import register
-from mapreduce_distributed_systems_spark.sources import load_table
+from mapreduce_distributed_systems_spark.sources import load_table, spread_partitions
 
 MIN_TOKENS = 50
 MIN_TTR = 0.05
@@ -190,9 +195,9 @@ def _source_stats(clean: DataFrame) -> DataFrame:
     "MinHash-LSH near-dup removal -> per-source stats, one plan.",
 )
 def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    docs = spread_partitions(load_table(spark, sf_dir, "documents"), "doc_id")
     kept = exact_keep(quality_gate(docs)).cache()
-    victims = near_dup_victims(shingle_hashes(kept.select("doc_id", "text")))
+    victims = near_dup_victims(token_shingle_hashes(kept.select("doc_id", "toks")))
     return _source_stats(kept.join(victims, "doc_id", "left_anti"))
 
 

@@ -3,4 +3,5 @@ from mapreduce_distributed_systems_spark.sources.tables import (  # noqa: F401
     load_table,
     load_tables,
     normalize_ts,
+    spread_partitions,
 )

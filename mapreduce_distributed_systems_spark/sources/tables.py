@@ -69,6 +69,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def spread_partitions(df: DataFrame, key: str) -> DataFrame:
+    """Hash-repartition a scanned frame on `key` into one partition per
+    core when the scan yields fewer than that, else return it as is.
+
+    Spark cannot split a parquet row group, so a corpus stored as one
+    row group scans as ONE task and every per-row operator fused into
+    that stage (tokenize, shingle explode, md5) runs on a single core.
+    Callers apply this only in front of CPU-heavy per-row work; it is
+    not part of load_table because tiny scans feeding cheap stages pay
+    more for the extra exchange than they gain. Once a scan already
+    has a partition per core (any input large enough to matter at
+    scale) it is a no-op, so big inputs never shuffle the row bodies.
+    """
+    n = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= n:
+        return df
+    return df.repartition(n, key)
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, register_views: bool = True
 ) -> dict[str, DataFrame]:

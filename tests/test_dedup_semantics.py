@@ -267,3 +267,42 @@ def test_epoch_shuffle_is_per_epoch_permutation(spark, sf_dir):
         1 for d in by_epoch[0] if by_epoch[0][d] != by_epoch[1][d]
     )
     assert moved > 0.9 * n
+
+
+def test_token_shingle_hashes_equal_text_shingle_hashes(spark, sf_dir):
+    """The pipeline hashes shingles off the quality gate's token array
+    instead of re-splitting the text; on every document that yields the
+    same (doc_id, h) multiset, duplicates included. The fixture's texts
+    are lower-case words and single spaces, so a few hand-made texts
+    add digits, punctuation, runs of separators, non-ASCII letters and
+    documents too short to shingle."""
+    from collections import Counter
+
+    from mapreduce_distributed_systems_spark.functions.text import words
+    from mapreduce_distributed_systems_spark.operators.dedup import (
+        shingle_hashes,
+        token_shingle_hashes,
+    )
+
+    odd = spark.createDataFrame(
+        [
+            (-1, "Émile's 3 cafés,  near  the   café: Émile's 3 cafés!"),
+            (-2, "x1y2z3 a-b-c a-b-c a-b-c"),
+            (-3, "two words"),
+            (-4, ""),
+        ],
+        "doc_id long, text string",
+    )
+    docs = (
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        .unionByName(odd)
+        .withColumn("toks", words("text"))
+    )
+
+    def multiset(df):
+        return Counter(map(tuple, df.collect()))
+
+    from_text = multiset(shingle_hashes(docs.select("doc_id", "text")))
+    from_toks = multiset(token_shingle_hashes(docs.select("doc_id", "toks")))
+    assert {d for d, _ in from_text} >= {-1, -2}
+    assert from_toks == from_text

@@ -94,3 +94,27 @@ def test_partition_parameterized_queries_are_partition_invariant(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
     assert results[0] == results[1] == results[2]
+
+
+@pytest.mark.slow  # four pipeline runs and four oracle runs, ~25 s
+def test_pipeline_clean_corpus_matches_oracle_under_any_partitioning(spark, sf_dir):
+    """The cleaning pipeline spreads its scan over one partition per
+    core and then shuffles on md5, doc_id, band keys and source; its
+    rows must match the DuckDB oracle whatever the shuffle width, and
+    with adaptive execution (partition coalescing, skew splits) off."""
+    from tests.duck_oracle import compare_spark_vs_oracle
+
+    spec = get_spec("pipeline_clean_corpus")
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    before = {k: spark.conf.get(k) for k in keys}
+    settings = [{keys[0]: n} for n in ("1", "7", "64")] + [{keys[1]: "false"}]
+    try:
+        for conf in settings:
+            for k in keys:
+                spark.conf.set(k, conf.get(k, before[k]))
+            spark.catalog.clearCache()  # no cached stage from another width
+            compare_spark_vs_oracle(spec.fn(spark, sf_dir), spec.oracle, sf_dir)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        spark.catalog.clearCache()

@@ -132,6 +132,59 @@ def test_dedup_exact_shuffles_on_hash_not_text(spark, sf_dir):
         assert "md5" in plan
 
 
+def _spread_exchanges(plan: str) -> list[list[str]]:
+    """The distinct REPARTITION_BY_NUM exchanges of a plan string (ids
+    stripped), each as its subtree's lines: the exchange line and every
+    deeper-indented line below it."""
+    import re
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    found = {}
+    for i, line in enumerate(lines):
+        if "Exchange" in line and "REPARTITION_BY_NUM" in line:
+            sub = [line]
+            for nxt in lines[i + 1:]:
+                if depth(nxt) <= depth(line):
+                    break
+                sub.append(nxt)
+            key = re.sub(r"#\d+L?|\[plan_id=\d+\]", "", line.lstrip(" :+-"))
+            found.setdefault(key, sub)
+    return list(found.values())
+
+
+def test_pipeline_spreads_single_row_group_scan_by_doc_id(spark, sf_dir):
+    # the fixture's documents file is one parquet row group, so its scan
+    # is one task; the pipeline hash-spreads it on doc_id right above
+    # the scan, and the gate's token array is computed above that
+    # exchange, on every core
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    assert docs.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    plan = physical_plan(get_spec("pipeline_clean_corpus").fn(spark, sf_dir))
+    (spread,) = _spread_exchanges(plan)
+    assert "hashpartitioning(doc_id" in spread[0]
+    below = "\n".join(spread[1:])
+    assert "FileScan parquet" in below and "documents" in below
+    assert "Exchange" not in below
+    assert "AS toks" not in below
+
+
+def test_pipeline_keeps_scan_partitions_when_one_per_core(spark, sf_dir, tmp_path):
+    # a documents directory with a parquet file per core already scans
+    # as one partition per core, so the spread must not add an exchange
+    n = spark.sparkContext.defaultParallelism
+    spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(n).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    docs = spark.read.parquet(str(tmp_path / "documents.parquet"))
+    assert docs.rdd.getNumPartitions() >= n
+    plan = physical_plan(get_spec("pipeline_clean_corpus").fn(spark, str(tmp_path)))
+    assert _spread_exchanges(plan) == []
+    assert "Exchange" in plan
+
+
 def test_minhash_never_shuffles_shingle_strings(spark, sf_dir):
     # round-5 re-key (ROADMAP item 1): the shingle string exists only
     # inside the map stage — every downstream exchange carries doc_id,
