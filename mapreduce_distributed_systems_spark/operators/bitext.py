@@ -36,8 +36,8 @@ Corpus rows are scanned twice and shuffled never; every exchange
 carries O(anchors x k) rows. At 100 TB both scans swap for the IVF
 cell probe (storage/vector_index.py) with the same margin tail —
 exactly how ann_cosine_topk's docstring hands off to ann_ivf_probe.
-That hand-off is AUDITED rather than asserted
-(tools/probe_bitext_ivf.py, round 8): on cluster-structured
+That hand-off is AUDITED rather than asserted (BENCH_NOTES
+"Round-8: the bitext IVF hand-off claim"): on cluster-structured
 embeddings the router recovers the true neighbor (two-level probe
 agreement 1.0 on planted clusters, tests/test_kmeans.py), but on this
 fixture's near-uniform synthetic vectors the probed-cells top-1

@@ -165,7 +165,8 @@ def _word_freqs(docs: DataFrame) -> DataFrame:
 # DRIVER_FIT_MAX_ROWS pattern): every merge round reads only the
 # vocabulary-sized word table, but the distributed loop paid one
 # pair-count aggregate + a one-row argmax collect PER ROUND —
-# probe_jobs measured 2 jobs x N_MERGES plus their submission gaps as
+# A job-timeline probe (OPTIMIZATION_r13.md, per-query log) measured
+# 2 jobs x N_MERGES plus their submission gaps as
 # ~1.5 s of the 2.3 s sf0.1 warm wall. When the vocabulary fits the
 # bound, ONE limit-collect pulls the symbolized word table and the
 # rounds run in local Python with the SAME semantics: adjacent-pair

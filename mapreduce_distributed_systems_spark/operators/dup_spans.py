@@ -19,7 +19,8 @@ Scale shape (the reason this plan looks the way it does): the naive
 formulation joins every n-gram instance back to a (sid -> global
 count) table to label it duplicated — a corpus-sized shuffle whose
 join keys are exactly the HOT ones (boilerplate n-grams appear in a
-large fraction of documents; probe_rewrite_skew showed AQE's
+large fraction of documents; BENCH_NOTES "Round-7 session 3: the
+rewrite tag-back" showed AQE's
 byte-based skew split can miss value-skew). This plan never joins on
 sid at all. Because an instance is duplicated unless its sid occurs
 exactly once corpus-wide, and a count-1 sid has exactly one owning

@@ -184,8 +184,8 @@ def _argmin_cells_int64(m: np.ndarray, bc: np.ndarray) -> np.ndarray:
 # which cell blocks a vector lands in, trading a bounded recall loss
 # for the sqrt(k) scan. With w = g (probe everything) the result is
 # exactly the flat argmin — tests/test_kmeans.py pins that identity and
-# the default-w agreement floor; tools/probe_two_level.py measures the
-# speedup at a post-gate k.
+# the default-w agreement floor; BENCH_NOTES "Round-7 two-level IVF
+# assignment probe" measures the speedup at a post-gate k.
 # --------------------------------------------------------------------------
 
 TWO_LEVEL_MIN_K = 4096  # <=: exact flat argmin (all certified paths)
@@ -459,7 +459,8 @@ def _assign_stats_int8(
 # a dim probe, the init TakeOrdered, and one stats collect per Lloyd
 # round, each re-deriving a plan and (at bench SFs, where the sample
 # IS the uncached corpus) re-running the scan + quantize Python pass.
-# probe_jobs measured those actions + their submission gaps at
+# A job-timeline probe (OPTIMIZATION_r13.md, per-query log) measured
+# those actions + their submission gaps at
 # ~3.5 s of the retrieval_rrf_fusion_ivf wall at sf0.1. When the
 # sample bound is at most this many rows, ONE TakeOrdered collect
 # pulls the sample (in the same (md5, vec_id) order the init already
@@ -631,7 +632,8 @@ def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "TWO_LEVEL_MIN_FIT_K and serving engages above TWO_LEVEL_MIN_K, "
     "where w < g trades bounded routing recall for the sqrt(k) scan "
     "(agreement floor: tests/test_kmeans.py; speedup: "
-    "tools/probe_two_level.py and the BENCH_NOTES fit-scaling table).",
+    "BENCH_NOTES 'Round-7 two-level IVF assignment probe' and the "
+    "fit-scaling table).",
     helpers=(kmeans_fit_int8,),  # VERDICT r13 #1c
 )
 def kmeans_cells_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -294,10 +294,11 @@ PARA_BOILERPLATE = (
 # banding width.
 POS_PACK = 100_000
 # Hot-slice split levers for the tag-back join (measured rationale in
-# tools/probe_rewrite_skew.py + BENCH_NOTES.md: AQE's byte-based skew
-# split is structurally blind to identical-content hot keys — the
-# payload lz4-collapses to ~median bytes while carrying ~7x median
-# rows — so the mitigation must be in the plan, not the runtime).
+# BENCH_NOTES "Round-7 session 3: the rewrite tag-back": AQE's
+# byte-based skew split is structurally blind to identical-content
+# hot keys — the payload lz4-collapses to ~median bytes while carrying
+# ~7x median rows — so the mitigation must be in the plan, not the
+# runtime).
 # Hashes with more than REWRITE_HOT_CAP instances route through a
 # broadcast join (the hot slice is bounded: <= n_paragraphs / CAP
 # rows); everything else takes the ordinary join with the hot rows
@@ -394,7 +395,8 @@ GROUP BY doc_id
     "corpus makes a HOT hash key, which the algebraic min absorbs "
     "map-side); the instance-tagging join back on the hash is the one "
     "skew-prone exchange. What protects it, MEASURED on a "
-    "boilerplate-dense replica (tools/probe_rewrite_skew.py): while "
+    "boilerplate-dense replica (BENCH_NOTES 'Round-7 session 3: the "
+    "rewrite tag-back'): while "
     "the distinct-paragraph table fits the broadcast threshold the "
     "tag-back is a broadcast join and the hot key never shuffles; in "
     "the forced shuffle-join regime AQE's skew split does NOT engage "

@@ -4,8 +4,9 @@
   Map emits ("a", filename), ("b", len(filename)), ("c", len(contents)),
   ("d", "xyzzy") per input; Reduce sorts values and joins with spaces.
   Chaos-injection itself (os.Exit / sleeps) is reproduced as a *test*
-  (tests/test_chaos.py) per SURVEY.md §5.5 — the query here is the
-  golden payload both twins must produce.
+  (tests/test_behavior.py::test_chaos_retries_match_golden) per
+  SURVEY.md §5.5 — the query here is the golden payload both twins
+  must produce.
 - early_exit (mrapps/early_exit.go:19-36): Map emits (filename, "1");
   Reduce counts. Atomic-commit behavior is Spark's FileOutputCommitter,
   tested separately.

@@ -206,9 +206,9 @@ def impact_prune(
 
 def _bm25_w_col():
     """The per-posting Okapi BM25 weight — ONE expression shared by
-    every scorer (pruned ranker, unpruned truth, bounded truth, seed
-    rescore, term max-impact) so all paths produce bit-identical
-    per-row doubles; requires columns tf, dl, df, n_docs, avgdl."""
+    the pruned ranker and the unpruned truth so both paths produce
+    bit-identical per-row doubles; requires columns tf, dl, df,
+    n_docs, avgdl."""
     return (
         F.log(
             F.lit(1.0)
@@ -236,8 +236,8 @@ def _bm25_relations(
     """The shared index relations every BM25 consumer derives from:
     (tf, scal, df, qt). tf is cached + materialized here (the ONE
     corpus-sized pass — see the comment inside); Spark's cache manager
-    dedupes by canonicalized plan, so the pruned ranker, the truth
-    pass, and the bounded truth all read one in-memory build."""
+    dedupes by canonicalized plan, so the pruned ranker and the truth
+    pass both read one in-memory build."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select("doc_id", F.explode(words("text")).alias("term"))
     # THE one corpus-sized pass: every downstream table (postings,
@@ -316,7 +316,9 @@ def _bm25_ranked(
     measures the production rankers against (offline-audit shape:
     per-query work is bounded only by the selected low-df terms'
     true posting lengths, so it runs on samples, never as serving;
-    _bm25_truth_topk below is the MaxScore-bounded equivalent).
+    a MaxScore-bounded equivalent measured slower in r11 and r12 and
+    was removed, see the BENCH_NOTES Round-11/Round-12 MaxScore
+    sections).
     `query_filter`/`query_cap` select the query block — defaults are
     the production stream; the sampled audit passes a tighter pair.
     Ranks are exact only up to BM25_TOP_K (the two-stage bounded cut
@@ -395,162 +397,6 @@ def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan, so both variants read ONE in-memory build."""
     return _bm25_ranked(spark, sf_dir, POSTING_CAP).where(
         F.col("rank") <= BM25_TOP_K
-    )
-
-
-# Safety margin for the bounded-truth threshold compares (ROADMAP
-# #31). Scores are ranked on round(sum, 6), so an exclusion is only
-# safe when the excluded doc's true score sits a full rounding quantum
-# below the k-th seed score; 1e-4 is 100 quanta — it also swallows the
-# float-association slack between a summed score and its term-bound
-# sum (~1e-13 relative). Costs a few extra survivors, never a miss.
-BM25_TRUTH_EPS = 1e-4
-
-
-def _bm25_truth_topk(
-    spark: SparkSession,
-    sf_dir: str,
-    query_filter: str = BM25_QUERY_FILTER,
-    query_cap: int = BM25_QUERY_CAP,
-) -> DataFrame:
-    """EXACT unpruned BM25 top-k with MaxScore/WAND-style candidate
-    bounding (ROADMAP #31; Turtle & Flood 1995 / Broder et al. 2003 —
-    public IR literature): identical output to
-    `_bm25_ranked(cap=None).where(rank <= BM25_TOP_K)` (differential-
-    pinned in tests/test_truth_bound.py), but the corpus-sized
-    candidate stream never reaches the heavy (query, doc) aggregate
-    for docs that provably cannot enter the top-k.
-
-    Steps (every bound is a TRUE upper bound, so pruning is lossless):
-      1. theta(q) = the k-th highest EXACT score among the impact-
-         pruned ranker's top-k docs — pruned postings are a subset,
-         so those docs' true scores are real achieved scores and the
-         true k-th best is >= theta.
-      2. ub(t) = max over t's postings of the exact per-row weight
-         (one map-side-combined aggregate; output is one row per
-         distinct query term).
-      3. MaxScore essential prefix: order q's terms by ub desc; a term
-         is essential iff the ub-sum of itself + everything after it
-         can still reach theta - eps. A doc matching ONLY nonessential
-         terms has upper bound < theta - eps and is never touched.
-      4. Partial scores over essential postings only (THE reduced
-         shuffle); survivors need s_essential + ub_rest >= theta - eps.
-      5. Survivors are exact-scored in ONE aggregation over all their
-         matched postings (same association as the unpruned path) and
-         ranked with the same bounded two-stage top-k.
-
-    Scale: the only corpus-proportional shuffle is step 4 over the
-    ESSENTIAL terms' postings; on a df-adversarial corpus (every
-    query term ~corpus-length postings) theta sits near the total ub
-    mass, the essential prefix collapses to ~1 term, and steps 4-5
-    shuffle a small fraction of what the naive truth pass did —
-    measured in tools/probe_truth_bound.py. Worst case (theta -inf:
-    fewer than k pruned seeds) degrades to exactly the unpruned plan.
-    """
-    k = BM25_TOP_K
-    tf, scal, df, qt = _bm25_relations(
-        spark, sf_dir, query_filter, query_cap
-    )
-
-    # per-posting weights for the <= query_cap x QUERY_TERMS distinct
-    # query terms, dl/df denormalized in (dl rides on the cached tf
-    # row since r14, so no doc-keyed join remains here). Cached:
-    # steps 1/2/4/5 each re-read it map-only;
-    # the driver/bench shims clearCache() per query.
-    terms_needed = qt.select("term", "df").distinct()
-    rows = (
-        tf.join(F.broadcast(terms_needed), "term")
-        .crossJoin(F.broadcast(scal))
-        .select("term", "doc_id", _bm25_w_col().alias("w"))
-        .cache()
-    )
-    rows.count()  # materialize before AQE's concurrent subqueries race
-
-    qpairs = qt.select("query_id", "term")
-    qrows = F.broadcast(qpairs).join(rows, "term").where(
-        F.col("doc_id") != F.col("query_id")
-    )
-
-    # 1. theta from the pruned ranker's winners, exact-rescored
-    seed = (
-        _bm25_ranked(spark, sf_dir, POSTING_CAP, query_filter, query_cap)
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id")
-    )
-    seed_s = (
-        qrows.join(F.broadcast(seed), ["query_id", "doc_id"])
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("w").alias("s"))
-    )
-    wth = W.partitionBy("query_id").orderBy(F.desc("s"), F.asc("doc_id"))
-    theta = (
-        seed_s.withColumn("_r", F.row_number().over(wth))
-        .where(F.col("_r") == k)
-        .select("query_id", F.col("s").alias("theta"))
-    )
-
-    # 2. true per-term max impact (tiny output, map-side combined)
-    ubw = rows.groupBy("term").agg(F.max("w").alias("ub"))
-
-    # 3. essential prefix per query (suffix-sum over <= QUERY_TERMS
-    # rows; queries without a full seed set keep theta = -inf and
-    # degrade to the unpruned plan)
-    neg_inf = F.lit(float("-inf"))
-    qtu = (
-        qpairs.join(F.broadcast(ubw), "term")
-        .join(F.broadcast(theta), "query_id", "left")
-        .withColumn("theta", F.coalesce("theta", neg_inf))
-    )
-    wsfx = (
-        W.partitionBy("query_id")
-        .orderBy(F.desc("ub"), F.asc("term"))
-        .rowsBetween(W.currentRow, W.unboundedFollowing)
-    )
-    qtu = qtu.withColumn("sfx", F.sum("ub").over(wsfx))
-    is_ess = F.col("sfx") >= F.col("theta") - F.lit(BM25_TRUTH_EPS)
-    qte = qtu.where(is_ess).select("query_id", "term")
-    ub_rest = (
-        qtu.where(~is_ess)
-        .groupBy("query_id")
-        .agg(F.sum("ub").alias("ub_rest"))
-    )
-
-    # 4. partial scores over essential postings; survivor filter
-    s_e = (
-        F.broadcast(qte).join(rows, "term")
-        .where(F.col("doc_id") != F.col("query_id"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("w").alias("s_e"))
-    )
-    surv = (
-        s_e.join(F.broadcast(ub_rest), "query_id", "left")
-        .join(F.broadcast(theta), "query_id", "left")
-        .where(
-            F.col("s_e") + F.coalesce("ub_rest", F.lit(0.0))
-            >= F.coalesce("theta", neg_inf) - F.lit(BM25_TRUTH_EPS)
-        )
-        .select("query_id", "doc_id")
-    )
-
-    # 5. one-shot exact scoring of survivors (AQE picks the join
-    # strategy from the measured survivor size) + the bounded fan-in
-    agg = (
-        qrows.join(surv, ["query_id", "doc_id"])
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("w"), 6).alias("bm25"))
-    )
-    wl = W.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-        F.desc("bm25"), F.asc("doc_id")
-    )
-    agg = (
-        agg.withColumn("_prn", F.row_number().over(wl))
-        .where(F.col("_prn") <= k)
-        .drop("_prn")
-    )
-    wr = W.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-    return (
-        agg.withColumn("rank", F.row_number().over(wr).cast("long"))
-        .where(F.col("rank") <= k)
     )
 
 
@@ -1071,11 +917,10 @@ def retrieval_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of growing with the query population. Registered r11
     (oracle: RETRIEVAL_QUALITY_SAMPLED_ORACLE).
 
-    Truth-side plan choice, MEASURED r11 AND r12 (BENCH_NOTES): the
-    MaxScore-bounded exact scorer (_bm25_truth_topk, ROADMAP #31) is
-    kept as a drop-in — identical results, differential-pinned in
-    tests/test_truth_bound.py — but NOT wired here, now on two
-    independent refutations. r11: the repo's closed-vocabulary probe
+    Truth-side plan choice, MEASURED r11 AND r12 (BENCH_NOTES): a
+    MaxScore-bounded exact scorer (ROADMAP #31) gave identical results
+    but was NOT wired here, and was then deleted, on two independent
+    refutations. r11: the repo's closed-vocabulary probe
     corpora concentrate every doc's score-sum just below theta, so
     any single-term admissible bound keeps ~26M of 26.1M candidates
     (2.3x slower). r12: on PROPER 500k-doc zipf corpora

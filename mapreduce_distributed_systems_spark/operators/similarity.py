@@ -635,14 +635,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kmeans_cells_sql(
-    k: int,
-    n_iter: int,
-    dim: int,
-    where: str = "",
-    source: str | None = None,
-    lead: str = "",
-) -> str:
+def _kmeans_cells_sql(k: int, n_iter: int, dim: int, where: str = "") -> str:
     """Unrolled-SQL replay of the int8 Lloyd fit (operators/kmeans.py
     kmeans_fit_int8): CTEs ending in `q8` (vec_id, qv) and `af`
     (vec_id, cell — the final assignment). Every learned quantity is
@@ -652,18 +645,11 @@ def _kmeans_cells_sql(
     quantizer's consumers (ann_ivf_kmeans, dedup_embedding_cosine_ivf)
     possible at all. `where` (e.g. " WHERE vec_id % 2 = 0") restricts
     the FIT corpus — the index-append oracle fits on a base split and
-    assigns the rest against the frozen centroids. `source` replaces
-    the whole (vec_id, v) relation the fit reads (the chunk->ANN
-    composition derives vectors from the chunk relation instead of
-    the embeddings table), and `lead` prepends extra CTEs before `e`.
-    The defaults keep every existing oracle byte-identical."""
-    src = (
-        source
-        or f"SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings{where}"
-    )
+    assigns the rest against the frozen centroids; the default empty
+    string keeps every existing oracle byte-identical."""
     sql = [
         f"""
-WITH {lead}e AS ({src}),
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings{where}),
 q8 AS (
   SELECT vec_id,
          list_transform(v, x -> CAST(round(x / (greatest(list_max(

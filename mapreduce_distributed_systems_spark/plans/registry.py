@@ -67,7 +67,6 @@ _OPERATOR_MODULES = (
     "mapreduce_distributed_systems_spark.streaming.kv_stream",
     "mapreduce_distributed_systems_spark.streaming.event_stream",
     "mapreduce_distributed_systems_spark.streaming.doc_stream",
-    "mapreduce_distributed_systems_spark.streaming.kv_tws",
     "mapreduce_distributed_systems_spark.streaming.shard_stream",
 )
 
@@ -131,16 +130,25 @@ def _load() -> None:
 # tools/plan_window.py from the folded r1-r14 evidence):
 #   (a) changed-fingerprint: pipeline_clean_corpus (its scan is spread
 #       over one partition per core and its shingle stage consumes the
-#       quality gate's token array);
+#       quality gate's token array), plus doc_bm25_topk,
+#       retrieval_quality_bm25_rrf, retrieval_quality_sampled and
+#       retrieval_rrf_fusion_ivf (docstring-only edits to the shared
+#       _bm25_relations/_bm25_ranked helpers and to
+#       retrieval_quality_sampled, after the unwired MaxScore-bounded
+#       truth scorer was deleted);
 #   (b) the 26 hard-stale names (newest green row > 3 rounds old);
 #   (c) planning-cohort (exactly-3-old r11 names) fill the remaining
-#       23 slots alphabetically; the spill heads r16.
+#       19 slots alphabetically; the spill (20 names) heads r16.
 # Everything outside the window stays covered by tests/test_parity.py,
 # which runs the same DuckDB oracles every session. Certified-by-round
 # map: COVERAGE.md / QUERIES.md.
 GATE_ORDER = (
-    # -- changed-fingerprint (1) --
+    # -- changed-fingerprint (5) --
+    "doc_bm25_topk",
     "pipeline_clean_corpus",
+    "retrieval_quality_bm25_rrf",
+    "retrieval_quality_sampled",
+    "retrieval_rrf_fusion_ivf",
     # -- hard-stale (26) --
     "events_rolling_7d_active_users",
     "events_weekly_retention",
@@ -168,7 +176,7 @@ GATE_ORDER = (
     "vocab_build_encode",
     "window_dedup_latest",
     "zorder_key_events",
-    # -- planning refresh (23) --
+    # -- planning refresh (19) --
     "ann_ivf_probe",
     "asof_purchase_view",
     "corpus_decontamination",
@@ -188,10 +196,6 @@ GATE_ORDER = (
     "pipeline_ccnet_filter",
     "pipeline_decontaminated_split",
     "q12_ship_priority",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_part_supplier_cnt",
-    "q17_small_qty_revenue",
 )
 
 # Round-15 rotation note: the r14 spill (planning-cohort names listed
@@ -201,15 +205,8 @@ GATE_ORDER = (
 # round-open checklist step 1), then run tools/plan_window.py and
 # paste.
 #
-# The ROUND-15 registration candidate (staged r13 with code + oracle
-# + dual-fixture parity tests, the discipline every registration has
-# followed since r10; NOT registered at r14 — an optimization round
-# adds no new query scope):
-#   pipeline_chunk_index       operators/chunk_index.py
-#                              (chunk relation -> deterministic
-#                              embedding -> IVF frozen-centroid
-#                              append — the chunk->ANN ingest
-#                              composition VERDICT r12 #4 asked for)
+# No registration candidate is staged: no operator in the package
+# waits for a slot.
 #
 # REGISTRY-SIZE CEILING (steady-state arithmetic): the driver window
 # refreshes 50 rows/round and the enforced staleness floor
@@ -220,13 +217,14 @@ GATE_ORDER = (
 # trio) -1 (r12 merge) = 196, +2 at r13 (dedup_span_rewrite +
 # doc_chunking — the r12-staged chunking PAIR landed as one rel-keyed
 # query, the THIRD executed merge, decided before either half
-# registered exactly as the ceiling policy demands) = 198 now; +1
-# (r14 chunk->ANN composition) = 199 — AT the practical ceiling.
-# No further merges are pre-identified; prefer deepening existing
-# certified families over net-new registrations, and identify the
-# next merge before registering past 199 (candidate: doc_tfidf_topterms
-# ranks by the same tf/df statistics the BM25 index persists — it
-# could re-key through the index tables if a slot is ever needed).
+# registered exactly as the ceiling policy demands) = 198 now, two
+# below the ceiling. Every registration is unconditional, so the
+# registered set does not depend on what is installed. No further
+# merges are pre-identified; prefer deepening existing certified
+# families over net-new registrations, and identify the next merge
+# before registering past 200 (candidate: doc_tfidf_topterms ranks by
+# the same tf/df statistics the BM25 index persists — it could re-key
+# through the index tables if a slot is ever needed).
 
 def all_specs() -> dict[str, QuerySpec]:
     """All registered specs, gate-priority queries first (see

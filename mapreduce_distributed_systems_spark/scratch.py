@@ -16,6 +16,12 @@ does not change any query's RESULT, so rewriting certified fn bodies
 fix would be cost without signal. Wired into both session.get_spark()
 (tests/bench/replay) and __spark_entry__ import (the external driver,
 which brings its own SparkSession and never calls get_spark).
+
+scratch_dir() gives the self-contained index queries (ann_ivf_persisted,
+doc_bm25_serve, ...) a named directory under the same root: they build
+a real on-disk artifact and RETURN lazy DataFrames that read it only
+when the caller materializes them, so a per-call try/finally would
+delete the index before it is scanned.
 """
 
 from __future__ import annotations
@@ -37,3 +43,8 @@ def ensure_process_scratch() -> str:
         tempfile.tempdir = _ROOT
         atexit.register(shutil.rmtree, _ROOT, ignore_errors=True)
     return _ROOT
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh directory under the per-process scratch root."""
+    return tempfile.mkdtemp(prefix=prefix, dir=ensure_process_scratch())

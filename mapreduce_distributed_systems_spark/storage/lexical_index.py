@@ -83,10 +83,10 @@ from mapreduce_distributed_systems_spark.operators.retrieval import (
     impact_prune,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
-from mapreduce_distributed_systems_spark.sources import load_table
-from mapreduce_distributed_systems_spark.storage.scratch import (
+from mapreduce_distributed_systems_spark.scratch import (
     scratch_dir as _scratch_dir,
 )
+from mapreduce_distributed_systems_spark.sources import load_table
 
 N_TERM_BUCKETS = 32
 MANIFEST_VERSION = 1

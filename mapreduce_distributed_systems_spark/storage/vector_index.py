@@ -67,10 +67,10 @@ from mapreduce_distributed_systems_spark.plans.registry import register
 
 MANIFEST_VERSION = 1
 
-# Scratch roots for the self-contained index queries: one per-process
-# root removed at exit (see storage/scratch.py for the rationale —
-# the query fns return LAZY DataFrames over the artifact).
-from mapreduce_distributed_systems_spark.storage.scratch import (  # noqa: E402
+# Scratch dirs for the self-contained index queries live under the
+# per-process scratch root removed at exit (see scratch.py for the
+# rationale — the query fns return LAZY DataFrames over the artifact).
+from mapreduce_distributed_systems_spark.scratch import (  # noqa: E402
     scratch_dir as _scratch_dir,
 )
 

@@ -55,6 +55,9 @@ from mapreduce_distributed_systems_spark.operators.retrieval import (
     QUERY_TERMS,
     _TOKS_DUCK,
 )
+from mapreduce_distributed_systems_spark.scratch import (
+    scratch_dir as _scratch_dir,
+)
 from mapreduce_distributed_systems_spark.sources import load_table
 from mapreduce_distributed_systems_spark.storage.lexical_index import (
     _prune_to_buckets,
@@ -63,9 +66,6 @@ from mapreduce_distributed_systems_spark.storage.lexical_index import (
     build_and_commit_bm25,
     read_bm25_index,
     write_bm25_index,
-)
-from mapreduce_distributed_systems_spark.storage.scratch import (
-    scratch_dir as _scratch_dir,
 )
 
 # deterministic corpus split: the base build indexes the even half,

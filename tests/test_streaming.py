@@ -369,30 +369,6 @@ def test_streaming_sessionization_equals_batch(spark, sf_dir):
     assert got == batch
 
 
-def test_kv_replay_tws_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas twin == batch replay (runs only where
-    the tws Python runner's protobuf dependency exists)."""
-    import pytest
-
-    from mapreduce_distributed_systems_spark.streaming.kv_tws import (
-        kv_replay_tws,
-        tws_runtime_available,
-    )
-
-    if not tws_runtime_available():
-        pytest.skip("google.protobuf unavailable: tws runner cannot start")
-    got = {
-        (r.key, r.final_value, r.n_effective_ops)
-        for r in kv_replay_tws(spark, sf_dir).collect()
-    }
-    ev = load_table(spark, sf_dir, "events")
-    want = {
-        (r.key, r.final_value, r.n_effective_ops)
-        for r in replay(op_log(ev)).collect()
-    }
-    assert got == want
-
-
 def test_shard_serve_stream_restart_carries_state(spark, sf_dir):
     """Kill-and-resume for the C14 streaming twin: process the first
     half of the time-ordered log, stop, restart from the same

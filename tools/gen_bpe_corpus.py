@@ -8,8 +8,9 @@ rested on the flat per-round shape alone. This writes a
 documents.parquet with a natural-text-like mixture — syllable-composed
 pseudo-words (rich pair inventory: ~114 distinct syllables, words of
 2-5 syllables) under a Zipf frequency law — whose vocabulary sustains
-thousands of merges, so tools/probe_bpe_rounds.py can record a
->=1k-round per-round cost curve on it. Deterministic (fixed seed),
+thousands of merges, so a >=1k-round per-round cost curve can be
+recorded on it (BENCH_NOTES "Round-8: BPE per-round cost to 1,024
+merges"). Deterministic (fixed seed),
 pure-ASCII text (letters + spaces only, matching the `[^\\p{L}]+`
 tokenizer), no Spark needed.
 """

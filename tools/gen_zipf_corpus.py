@@ -6,9 +6,10 @@ corpora, whose CLOSED vocabulary concentrates score sums; the
 surviving claim — "MaxScore prunes hard on natural zipf text" —
 rested on a small planted corpus. This generator builds a
 deterministically-seeded documents table whose token ranks follow a
-zipf(1) law over a LARGE vocabulary, at any document count, so
-tools/probe_truth_bound.py can measure that claim at the 100x scale
-the closed-vocabulary refutation used.
+zipf(1) law over a LARGE vocabulary, at any document count, so that
+claim could be measured at the 100x scale the closed-vocabulary
+refutation used (BENCH_NOTES "Round-12: MaxScore bound" holds the
+result).
 
 Token law: for token slot (doc_id, pos), u = hash(doc_id, pos) mapped
 to [0, 1); rank = floor(exp(u * ln(V))) is log-uniform on [1, V),
