@@ -20,10 +20,11 @@ brief adds on top of the reference's inventory.
 Plan shape (the ann_cosine_topk discipline, applied twice):
   1. bounded anchor block from side A (deterministic filter + LIMIT,
      collected to the task closure — never corpus-proportional);
-  2. ONE scan of side B through the pruned BLAS kernel: each partition
-     emits ~k rows per anchor (the round-8 lossless margin prune), so
-     the rank window reads O(k x partitions) rows per anchor; top-k
-     gives avgk_x and rank 1 gives the candidate y*;
+  2. ONE scan of side B through similarity._cosine_topk_scan, the
+     repo's single pruned BLAS kernel: each partition emits ~k rows
+     per anchor (the round-8 lossless margin prune), so the rank
+     window reads O(k x partitions) rows per anchor; top-k gives
+     avgk_x and rank 1 gives the candidate y*;
   3. the distinct y* set is bounded by the anchor cap — collect it
      (with vectors) as the reverse query block, ONE scan of side A
      for avgk_y;
@@ -57,8 +58,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_distributed_systems_spark.operators.similarity import (
-    _consolidate_mask,
-    _prune_mask,
+    COSINE_KERNEL,
+    _cosine_topk_scan,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.sources import load_table
@@ -69,55 +70,18 @@ KNN_K = 4  # neighborhood size for the margin denominator
 MARGIN_SCALED = 1_020_000  # keep pairs with margin >= 1.02 (x 1e6)
 
 
-def _pruned_cos6_scan(corpus: DataFrame, q_ids, q_mat, k: int) -> DataFrame:
-    """Scan `corpus` (vec_id, embedding) against the closure query
-    block; per partition emit only the ~k best rows per query (margin
-    prune — lossless under the (cos6 DESC, vec_id ASC) order, see
-    similarity._ROUND_MARGIN). Returns (query_id, neighbor_id, cos6)."""
-    import numpy as np
-    import pandas as pd
-
-    q_nrm = np.linalg.norm(q_mat, axis=1)
-
-    def score(batches):
-        cq, cn, cs = [], [], []
-        for pdf in batches:
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            ids = pdf["vec_id"].to_numpy()
-            s = (m @ q_mat.T) / (nrm[:, None] * q_nrm[None, :])
-            s[ids[:, None] == q_ids[None, :]] = -np.inf  # self pairs
-            ni, qi = np.nonzero(_prune_mask(s, k))
-            cq.append(q_ids[qi])
-            cn.append(ids[ni])
-            cs.append(s[ni, qi])
-        if cq:
-            qa, na, sa = map(np.concatenate, (cq, cn, cs))
-            keep = _consolidate_mask(qa, sa, q_ids, k)
-            yield pd.DataFrame(
-                {
-                    "query_id": qa[keep],
-                    "neighbor_id": na[keep],
-                    "cos_raw": sa[keep],
-                }
-            )
-
-    return corpus.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_raw double"
-    ).select(
+def _knn_stats(scan: DataFrame, k: int) -> DataFrame:
+    """Top-k rank over a pruned _cosine_topk_scan: per query, the
+    exact-integer k-NN cos6 sum + count, and the rank-1 neighbor."""
+    cos6 = scan.select(
         "query_id",
         "neighbor_id",
         F.round(F.col("cos_raw") * 1e6, 0).cast("long").alias("cos6"),
     )
-
-
-def _knn_stats(scan: DataFrame, k: int) -> DataFrame:
-    """Top-k rank over a pruned scan: per query, the exact-integer
-    k-NN cosine sum + count, and the rank-1 neighbor."""
     w = W.partitionBy("query_id").orderBy(
         F.desc("cos6"), F.asc("neighbor_id")
     )
-    ranked = scan.withColumn("rank", F.row_number().over(w)).where(
+    ranked = cos6.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k
     )
     return ranked.groupBy("query_id").agg(
@@ -201,6 +165,7 @@ WHERE CAST(round(kx.best_cos6 * 1e6 /
     "pairs. Two pruned BLAS scans (A->B, then the bounded distinct-"
     "best set B->A), k-NN sums in exact scaled-integer space, "
     "broadcast-joined margin tail; corpus never shuffled.",
+    helpers=(*COSINE_KERNEL, _knn_stats),
 )
 def bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
@@ -222,7 +187,7 @@ def bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_ids = np.array([r.vec_id for r in arows], dtype=np.int64)
     a_mat = np.array([r.embedding for r in arows], dtype=np.float64)
 
-    kx = _knn_stats(_pruned_cos6_scan(side_b, a_ids, a_mat, KNN_K), KNN_K)
+    kx = _knn_stats(_cosine_topk_scan(side_b, a_ids, a_mat, KNN_K), KNN_K)
     kx.cache().count()  # bounded (<= ANCHOR_CAP rows); reused twice below
 
     # reverse block: the distinct best candidates, with vectors —
@@ -237,7 +202,7 @@ def bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     y_mat = np.array([r.embedding for r in yrows], dtype=np.float64)
 
     ky = (
-        _knn_stats(_pruned_cos6_scan(side_a, y_ids, y_mat, KNN_K), KNN_K)
+        _knn_stats(_cosine_topk_scan(side_a, y_ids, y_mat, KNN_K), KNN_K)
         .withColumnRenamed("query_id", "yid")
         .select("yid", F.col("knn_sum").alias("knn_sum_y"),
                 F.col("knn_n").alias("knn_n_y"))

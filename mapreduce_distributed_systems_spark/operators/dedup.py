@@ -930,13 +930,6 @@ def norm_expr(a: str) -> F.Column:
     return F.sqrt(dot_expr(a, a))
 
 
-def cosine_expr(a: str, b: str) -> F.Column:
-    """Full cosine — for one-off pairs. In pair joins, precompute each
-    side's norm once per VECTOR (norm_expr) and divide the dot by the
-    product: 3x fewer array passes per pair."""
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 @register(
     "dedup_embedding_cosine",
     oracle=EMB_ORACLE,

@@ -180,39 +180,52 @@ FROM bm25_ranked WHERE rank <= {BM25_TOP_K}
 """
 
 
-def impact_prune(
-    tf: DataFrame, cap: int, key: str = "term", value: str = "tf",
-    id_col: str = "doc_id",
+def partition_topk(
+    df: DataFrame, cap: int, key: str, value: str, id_col: str
 ) -> DataFrame:
-    """Per-`key` top-`cap` rows in (`value` DESC, `id_col` ASC) order
-    via two bounded windows (the r8 ANN-prune shape): stage 1 takes
-    the per-input-partition top-cap per key — a superset of the
-    global top-cap, whatever the partitioning — so stage 2's per-key
-    window reads <= cap x n_partitions rows, never a full hot-key
-    posting list in one task. Results are exactly the naive
-    `row_number() OVER (PARTITION BY key ORDER BY value DESC, id) <=
-    cap` (differential-pinned in tests/test_retrieval.py)."""
-    w1 = W.partitionBy(F.spark_partition_id(), key).orderBy(
+    """Stage 1 of the DataFrame-level two-stage top-k (impact_prune,
+    lexical_index._prune_to_buckets and _bm25_ranked's brute rank
+    fan-in; the r8 ANN-prune shape, REPOSE/Odyssey's local top-k): the
+    per-(input partition, `key`) top-`cap` rows in (`value` DESC,
+    `id_col` ASC) order. It is a superset of the global per-key
+    top-cap whatever the partitioning — a row beaten by `cap` rows of
+    its own partition is beaten by at least as many globally — so a
+    per-key window over its output reads <= cap x n_partitions rows
+    per key and returns exactly the naive window's rows
+    (differential-pinned in tests/test_retrieval.py)."""
+    w = W.partitionBy(F.spark_partition_id(), key).orderBy(
         F.desc(value), F.asc(id_col)
     )
-    local = tf.withColumn("_prn", F.row_number().over(w1)).where(
+    return df.withColumn("_prn", F.row_number().over(w)).where(
         F.col("_prn") <= cap
     ).drop("_prn")
-    w2 = W.partitionBy(key).orderBy(F.desc(value), F.asc(id_col))
+
+
+def impact_prune(tf: DataFrame, cap: int) -> DataFrame:
+    """Per-term top-`cap` postings in (tf DESC, doc_id ASC) order via
+    two bounded windows: partition_topk, then the per-term window over
+    its survivors — never a full hot-key posting list in one task.
+    Results are exactly the naive `row_number() OVER (PARTITION BY
+    term ORDER BY tf DESC, doc_id) <= cap`."""
+    local = partition_topk(tf, cap, "term", "tf", "doc_id")
+    w2 = W.partitionBy("term").orderBy(F.desc("tf"), F.asc("doc_id"))
     return local.withColumn("_prn", F.row_number().over(w2)).where(
         F.col("_prn") <= cap
     ).drop("_prn")
 
 
-def _bm25_w_col():
+def _bm25_w_col(n_docs=None, avgdl=None):
     """The per-posting Okapi BM25 weight — ONE expression shared by
-    the pruned ranker and the unpruned truth so both paths produce
-    bit-identical per-row doubles; requires columns tf, dl, df,
-    n_docs, avgdl."""
+    every BM25 scorer (the in-session rankers and the stored-index
+    serve path) so all produce bit-identical per-row doubles; requires
+    columns tf, dl, df. The corpus scalars default to the n_docs and
+    avgdl columns; the serve path passes its manifest's literals."""
+    n_docs = F.col("n_docs") if n_docs is None else n_docs
+    avgdl = F.col("avgdl") if avgdl is None else avgdl
     return (
         F.log(
             F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5))
+            + (n_docs - F.col("df") + F.lit(0.5))
             / (F.col("df") + F.lit(0.5))
         )
         * (F.col("tf") * F.lit(BM25_K1 + 1.0))
@@ -221,7 +234,7 @@ def _bm25_w_col():
             + F.lit(BM25_K1)
             * (
                 F.lit(1.0 - BM25_B)
-                + F.lit(BM25_B) * F.col("dl") / F.col("avgdl")
+                + F.lit(BM25_B) * F.col("dl") / avgdl
             )
         )
     )
@@ -344,26 +357,24 @@ def _bm25_ranked(
         F.round(F.sum("w"), 6).alias("bm25")
     )
     # Bounded rank fan-in for the BRUTE path only (round 10): a
-    # per-(input-partition, query) top-k first — a superset of the
-    # global top-k whatever the partitioning (the differential-pinned
-    # impact_prune argument) — so the per-query rank window reads
-    # <= k x n_partitions rows instead of ONE task sorting a query's
-    # corpus-sized candidate set. Gated on cap=None because the
-    # pruned path's candidates are already <= QUERY_TERMS x cap per
-    # query and the extra exchange+sort is pure overhead there
-    # (A/B at sf0.1: 11.7 s -> 16.9 s cold with the stage applied
-    # unconditionally).
+    # per-(input-partition, query) top-k first (partition_topk, the
+    # differential-pinned stage 1 of impact_prune) — so the per-query
+    # rank window reads <= k x n_partitions rows instead of ONE task
+    # sorting a query's corpus-sized candidate set. Gated on cap=None
+    # because the pruned path's candidates are already <= QUERY_TERMS
+    # x cap per query and the extra exchange+sort is pure overhead
+    # there (A/B at sf0.1: 11.7 s -> 16.9 s cold with the stage
+    # applied unconditionally).
     if cap is None:
-        wl = W.partitionBy(F.spark_partition_id(), "query_id").orderBy(
-            F.desc("bm25"), F.asc("doc_id")
-        )
-        agg = (
-            agg.withColumn("_prn", F.row_number().over(wl))
-            .where(F.col("_prn") <= BM25_TOP_K)
-            .drop("_prn")
-        )
+        agg = partition_topk(agg, BM25_TOP_K, "query_id", "bm25", "doc_id")
     wr = W.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
     return agg.withColumn("rank", F.row_number().over(wr).cast("long"))
+
+
+# the in-session BM25 ranker's shared helpers, declared in helpers= by
+# every consumer: their source is part of each certified definition
+BM25_RANKER = (_bm25_relations, _bm25_ranked, impact_prune, partition_topk,
+               _bm25_w_col)
 
 
 @register(
@@ -381,9 +392,7 @@ def _bm25_ranked(
     "(three map-side-combined aggregates); the posting prune is two "
     "bounded windows (per-input-partition top-cap, then top-cap over "
     "the survivors), never a full hot-term sort.",
-    # VERDICT r13 #1c / r14 dl-carry: the ranking body lives in these
-    # shared helpers — part of the certified definition
-    helpers=(_bm25_relations, _bm25_ranked, impact_prune),
+    helpers=BM25_RANKER,
 )
 def doc_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index + impact prune + term-at-a-time scoring; see module
@@ -587,8 +596,8 @@ SELECT 'ivf' AS dense_leg, * FROM ({RRF_IVF_ORACLE}) ivf_leg
     "r12 from the separate retrieval_rrf_fusion (r9-certified) per "
     "the registry-ceiling rotation; both oracle texts are embedded "
     "verbatim.",
-    helpers=(_rrf_fuse, _bm25_relations, _bm25_ranked, kmeans_fit_int8,
-             _ivf_build, _ivf_probe_topk),
+    helpers=(_rrf_fuse, *BM25_RANKER, kmeans_fit_int8, _ivf_build,
+             _ivf_probe_topk),
     # ADVICE r12 #2 + VERDICT r13 #1c: the fusion body, the shared BM25
     # relations/ranking (r14 dl-carry), and the IVF leg's fit/build/
     # probe helpers are all part of this query's certified fingerprint
@@ -760,8 +769,7 @@ FROM names n CROSS JOIN tot t LEFT JOIN per_sys p ON p.system = n.system
     "ground-truth pass runs on a query sample as an offline audit "
     "(it reads full posting lists by design); the certified number is "
     "what an index rollout gates on.",
-    helpers=(retrieval_rrf_fusion, _rrf_fuse, _bm25_relations,
-             _bm25_ranked),
+    helpers=(retrieval_rrf_fusion, _rrf_fuse, *BM25_RANKER),
     # ADVICE r12 #2 + VERDICT r13 #1c: the hybrid leg composes the
     # RETIRED r12 callable, which fuses via the shared helper, and the
     # truth/pruned rankings share the r14 dl-carry relations — all are
@@ -906,7 +914,7 @@ FROM tot t CROSS JOIN per_sys p
     "work is fixed per corpus snapshot instead of growing with the "
     "query load — cheap enough to gate every index build, not just "
     "rollouts.",
-    helpers=(_bm25_relations, _bm25_ranked),  # r14 dl-carry
+    helpers=BM25_RANKER,
 )
 def retrieval_quality_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded always-on audit: recall@10 + integer DCG/IDCG of the

@@ -14,7 +14,10 @@ Scale design (100 TB):
   the corpus and emits only its local top-k per query (margin-pruned
   inside the kernel — see _ROUND_MARGIN — so the final rank window
   reads O(k x n_partitions) rows per query, never the corpus; the
-  corpus itself is never shuffled);
+  corpus itself is never shuffled). ONE kernel, _cosine_topk_scan,
+  serves every brute scan (ann_cosine_topk, ann_cosine_filtered,
+  ann_hard_negatives and bitext_margin_mine); each caller applies
+  only its own rounding;
 - LSH: the corpus is bucketed once (narrow map), candidates come from
   a bucket-equi join — the shuffle is on the bucket key, and recall is
   tuned by bands/bits, never by scanning everything.
@@ -44,7 +47,7 @@ ANN_QUERY_CAP = 256
 # to emit EVERY (query, neighbor, score) triple, so the final
 # row_number window hash-partitioned a corpus-sized stream into at
 # most ANN_QUERY_CAP partitions — O(corpus) rows per window task at
-# 100 TB. The kernels now keep a per-PARTITION top-k per query, so the
+# 100 TB. The kernel now keeps a per-PARTITION top-k per query, so the
 # window reads O((k + tie band) x n_partitions) rows per query,
 # independent of corpus row count. Pruning is lossless under the final
 # ROUNDED (cos DESC, neighbor_id ASC) order: the certified value path
@@ -59,22 +62,30 @@ ANN_QUERY_CAP = 256
 _ROUND_MARGIN = 2e-6
 
 
-def _prune_mask(s, k: int, margin: float = _ROUND_MARGIN):
-    """Per-query-column top-k mask over a (rows x queries) raw-score
-    matrix. Keeps every row within `margin` of the column's k-th
-    largest finite score; -inf marks ineligible rows (self-pairs,
-    label mismatches, definitely-over-ceiling rows) and is never
-    kept. Exactness argument: module comment above."""
+def _prune_mask(s, k: int, ceiling=None, margin: float = _ROUND_MARGIN):
+    """Per-query-column top-k mask over one batch's (rows x queries)
+    raw-score matrix. Keeps every row within `margin` of the column's
+    k-th largest finite score; -inf marks ineligible rows (self-pairs,
+    label mismatches) and is never kept. With `ceiling`, scores fall
+    in three bands around it: definitely over (rounds above it
+    whatever round-half does — ineligible), ambiguous (within the
+    margin — kept, Spark's rounding decides) and definitely under
+    (eligible: the normal top-k). Exactness argument: module comment
+    above."""
     import numpy as np
 
+    maybe = False
+    if ceiling is not None:
+        maybe = (s > ceiling - margin) & (s <= ceiling + margin)
+        s = np.where(s <= ceiling - margin, s, -np.inf)
     n = s.shape[0]
     finite = np.isfinite(s)
     if n <= k:
-        return finite
+        return finite | maybe
     thr = np.partition(s, n - k, axis=0)[n - k]  # k-th largest per column
     # a column with < k finite scores partitions -inf into thr, and
     # `finite` alone decides — every real candidate is kept
-    return finite & (s >= thr[None, :] - margin)
+    return (finite & (s >= thr[None, :] - margin)) | maybe
 
 
 def _consolidate_mask(qa, sa, q_ids, k: int, ceiling=None,
@@ -106,6 +117,79 @@ def _consolidate_mask(qa, sa, q_ids, k: int, ceiling=None,
         keep[idx] = keep[idx] | (sj >= thr - margin)
     return keep
 
+
+def _prune_partition(batches, q_ids, k: int, ceiling=None):
+    """Both prune stages over one partition: `batches` yields
+    (cols, s) per Arrow batch — `cols` a tuple of per-row arrays,
+    `s` the (rows x queries) raw-score matrix with -inf on ineligible
+    cells. Returns (query ids, *cols, raw scores) of the survivors,
+    or None for an empty partition."""
+    import numpy as np
+
+    cq, cc, cs = [], [], []
+    for cols, s in batches:
+        ni, qi = np.nonzero(_prune_mask(s, k, ceiling))
+        cq.append(q_ids[qi])
+        cc.append([c[ni] for c in cols])
+        cs.append(s[ni, qi])
+    if not cq:
+        return None
+    qa, sa = np.concatenate(cq), np.concatenate(cs)
+    keep = _consolidate_mask(qa, sa, q_ids, k, ceiling=ceiling)
+    return (qa[keep], *(np.concatenate(c)[keep] for c in zip(*cc)), sa[keep])
+
+
+def _cosine_topk_scan(
+    corpus: DataFrame, q_ids, q_mat, k: int, q_lab=None, ceiling=None
+) -> DataFrame:
+    """THE brute-cosine scan kernel: a per-partition BLAS multiply of
+    `corpus` (vec_id, embedding[, label]) against the closure query
+    block (Arrow-batched mapInPandas; the corpus is scanned once and
+    never shuffled). Self pairs are ineligible; with `q_lab`, so is
+    every row whose label differs from the query's; with `ceiling`,
+    so is every score that rounds above it whatever round-half does
+    (the ambiguous band is kept for the caller's rounded filter).
+    Each partition emits only its ~k best rows per query
+    (margin-pruned, lossless under the final rounded (cos DESC, id
+    ASC) order — see _ROUND_MARGIN). Returns (query_id, neighbor_id[,
+    label], cos_raw); callers apply their own rounding."""
+    import numpy as np
+    import pandas as pd
+
+    q_nrm = np.linalg.norm(q_mat, axis=1)
+    names = ["query_id", "neighbor_id", "cos_raw"]
+    schema = "query_id long, neighbor_id long, cos_raw double"
+    if q_lab is not None:
+        names.insert(2, "label")
+        schema = "query_id long, neighbor_id long, label int, cos_raw double"
+
+    def scored(batches):
+        for pdf in batches:
+            m = np.array(list(pdf["embedding"]), dtype=np.float64)
+            nrm = np.linalg.norm(m, axis=1)
+            ids = pdf["vec_id"].to_numpy()
+            s = (m @ q_mat.T) / (nrm[:, None] * q_nrm[None, :])
+            s[ids[:, None] == q_ids[None, :]] = -np.inf  # self
+            cols = (ids,)
+            if q_lab is not None:
+                lab = pdf["label"].to_numpy(dtype=np.int64)
+                s[lab[:, None] != q_lab[None, :]] = -np.inf
+                cols = (ids, lab.astype("int32"))
+            yield cols, s
+
+    def score(batches):
+        out = _prune_partition(scored(batches), q_ids, k, ceiling)
+        if out is not None:
+            yield pd.DataFrame(dict(zip(names, out)))
+
+    return corpus.mapInPandas(score, schema=schema)
+
+
+# declared in helpers= by every consumer: the kernel's source is part
+# of each certified definition
+COSINE_KERNEL = (_cosine_topk_scan, _prune_partition, _prune_mask,
+                 _consolidate_mask)
+
 BRUTE_ORACLE = f"""
 WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE {QUERY_FILTER}
@@ -133,19 +217,15 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {TOP_K}
     bench=True,
     doc="Brute-force cosine top-10 for a deterministic query subset — "
     "the exact baseline for the LSH path.",
+    helpers=COSINE_KERNEL,
 )
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scoring is a per-partition BLAS matrix multiply (Arrow-batched
-    mapInPandas): the small query matrix ships in the task closure,
-    the corpus is scanned once, never shuffled; each partition keeps a
-    running top-k per query (margin-pruned, lossless under the final
-    rounded order — see _ROUND_MARGIN) and emits ~k rows per query, so
-    the rank window's input is O(k x n_partitions) per query instead
-    of corpus-sized. This is the scale shape — on a cluster each
-    executor multiplies its corpus slice against the broadcast query
-    block and ships back only its local winners."""
+    """Scoring is _cosine_topk_scan: each partition emits ~k rows per
+    query, so the rank window's input is O(k x n_partitions) per query
+    instead of corpus-sized. This is the scale shape — on a cluster
+    each executor multiplies its corpus slice against the broadcast
+    query block and ships back only its local winners."""
     import numpy as np
-    import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # bounded collect: deterministic order + LIMIT, never input-proportional
@@ -157,35 +237,11 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    q_nrm = np.linalg.norm(q_mat, axis=1)
-
-    def score(batches):
-        cq, cn, cs = [], [], []
-        for pdf in batches:
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            ids = pdf["vec_id"].to_numpy()
-            s = (m @ q_mat.T) / (nrm[:, None] * q_nrm[None, :])
-            s[ids[:, None] == q_ids[None, :]] = -np.inf  # self: never a candidate
-            ni, qi = np.nonzero(_prune_mask(s, TOP_K))
-            cq.append(q_ids[qi])
-            cn.append(ids[ni])
-            cs.append(s[ni, qi])
-        if cq:
-            qa, na, sa = map(np.concatenate, (cq, cn, cs))
-            keep = _consolidate_mask(qa, sa, q_ids, TOP_K)
-            yield pd.DataFrame(
-                {
-                    "query_id": qa[keep],
-                    "neighbor_id": na[keep],
-                    "cos_sim": sa[keep],
-                }
-            )
-
-    scored = emb.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    ).where(F.col("neighbor_id") != F.col("query_id")).withColumn(
-        "cos_sim", F.round("cos_sim", 6)
+    scored = (
+        _cosine_topk_scan(emb, q_ids, q_mat, TOP_K)
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id",
+                F.round("cos_raw", 6).alias("cos_sim"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return (
@@ -229,13 +285,13 @@ FROM ranked WHERE rank <= {TOP_K}
     "predicate becomes partition pruning and cuts the scan itself. "
     "Same bounded query block and scan-once/no-shuffle corpus shape "
     "as ann_cosine_topk.",
+    helpers=COSINE_KERNEL,
 )
 def ann_cosine_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-partition BLAS scoring with a per-query label mask: the
-    query block (ids, labels, vectors) ships in the task closure; only
+    """_cosine_topk_scan with the per-query label mask: the query
+    block (ids, labels, vectors) ships in the task closure; only
     label-matching (query, neighbor, score) triples are emitted."""
     import numpy as np
-    import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding", "label"
@@ -249,44 +305,11 @@ def ann_cosine_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     q_lab = np.array([r.label for r in qrows], dtype=np.int64)
     q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    q_nrm = np.linalg.norm(q_mat, axis=1)
-
-    def score(batches):
-        cq, cn, cl, cs = [], [], [], []
-        for pdf in batches:
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            lab = pdf["label"].to_numpy(dtype=np.int64)
-            ids = pdf["vec_id"].to_numpy()
-            s = (m @ q_mat.T) / (nrm[:, None] * q_nrm[None, :])
-            # ineligible = label mismatch or self; the top-k prune then
-            # keeps ~k label-matching rows per query per partition
-            s[lab[:, None] != q_lab[None, :]] = -np.inf
-            s[ids[:, None] == q_ids[None, :]] = -np.inf
-            ni, qi = np.nonzero(_prune_mask(s, TOP_K))
-            cq.append(q_ids[qi])
-            cn.append(ids[ni])
-            cl.append(lab[ni])
-            cs.append(s[ni, qi])
-        if cq:
-            qa, na, la, sa = map(np.concatenate, (cq, cn, cl, cs))
-            keep = _consolidate_mask(qa, sa, q_ids, TOP_K)
-            yield pd.DataFrame(
-                {
-                    "query_id": qa[keep],
-                    "neighbor_id": na[keep],
-                    "label": la[keep].astype("int32"),
-                    "cos_sim": sa[keep],
-                }
-            )
-
     scored = (
-        emb.mapInPandas(
-            score,
-            schema="query_id long, neighbor_id long, label int, cos_sim double",
-        )
+        _cosine_topk_scan(emb, q_ids, q_mat, TOP_K, q_lab=q_lab)
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round("cos_sim", 6))
+        .select("query_id", "neighbor_id", "label",
+                F.round("cos_raw", 6).alias("cos_sim"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w).cast("long")).where(
@@ -1173,10 +1196,10 @@ SELECT query_id, neighbor_id, cos_sim, rank FROM ranked WHERE rank <= {TOP_K}
     "planted exact duplicates of every query certify the exclusion "
     "branch non-vacuously. At 100 TB the brute scan swaps for the IVF "
     "index probe with the same ceiling-then-rank tail.",
+    helpers=COSINE_KERNEL,
 )
 def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     shift = emb.agg(F.max("vec_id")).collect()[0][0] + 1  # broadcast scalar
@@ -1188,52 +1211,17 @@ def ann_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q_ids = np.array([r.vec_id for r in qrows], dtype=np.int64)
     q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    q_nrm = np.linalg.norm(q_mat, axis=1)
     planted = spark.createDataFrame(
         [(int(r.vec_id + shift), list(map(float, r.embedding))) for r in qrows],
         "vec_id long, embedding array<float>",
     )
     corpus = emb.unionByName(planted)
-
-    def score(batches):
-        cq, cn, cs = [], [], []
-        for pdf in batches:
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            nrm = np.linalg.norm(m, axis=1)
-            ids = pdf["vec_id"].to_numpy()
-            s = (m @ q_mat.T) / (nrm[:, None] * q_nrm[None, :])
-            s[ids[:, None] == q_ids[None, :]] = -np.inf  # self
-            # three bands around the ceiling: definitely-over (rounds
-            # above it whatever round-half does — ineligible),
-            # ambiguous (within the margin — keep, Spark's rounding
-            # decides), definitely-under (eligible: normal top-k)
-            maybe = (s > HARD_NEG_CEILING - _ROUND_MARGIN) & (
-                s <= HARD_NEG_CEILING + _ROUND_MARGIN
-            )
-            s_def = np.where(s <= HARD_NEG_CEILING - _ROUND_MARGIN, s, -np.inf)
-            ni, qi = np.nonzero(_prune_mask(s_def, TOP_K) | maybe)
-            cq.append(q_ids[qi])
-            cn.append(ids[ni])
-            cs.append(s[ni, qi])
-        if cq:
-            qa, na, sa = map(np.concatenate, (cq, cn, cs))
-            keep = _consolidate_mask(
-                qa, sa, q_ids, TOP_K, ceiling=HARD_NEG_CEILING
-            )
-            yield pd.DataFrame(
-                {
-                    "query_id": qa[keep],
-                    "neighbor_id": na[keep],
-                    "cos_sim": sa[keep],
-                }
-            )
-
     scored = (
-        corpus.mapInPandas(
-            score, schema="query_id long, neighbor_id long, cos_sim double"
-        )
+        _cosine_topk_scan(corpus, q_ids, q_mat, TOP_K,
+                          ceiling=HARD_NEG_CEILING)
         .where(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", F.round("cos_sim", 6))
+        .select("query_id", "neighbor_id",
+                F.round("cos_raw", 6).alias("cos_sim"))
         .where(F.col("cos_sim") <= F.lit(HARD_NEG_CEILING))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))

@@ -128,24 +128,47 @@ def _load() -> None:
 # decides which queries get the hard external oracle signal. The window
 # ROTATES per round. Round-15 composition (computed mechanically by
 # tools/plan_window.py from the folded r1-r14 evidence):
-#   (a) changed-fingerprint: pipeline_clean_corpus (its scan is spread
-#       over one partition per core and its shingle stage consumes the
-#       quality gate's token array), plus doc_bm25_topk,
-#       retrieval_quality_bm25_rrf, retrieval_quality_sampled and
-#       retrieval_rrf_fusion_ivf (docstring-only edits to the shared
-#       _bm25_relations/_bm25_ranked helpers and to
-#       retrieval_quality_sampled, after the unwired MaxScore-bounded
-#       truth scorer was deleted);
+#   (a) changed-fingerprint (14):
+#       - pipeline_clean_corpus: its scan is spread over one partition
+#         per core and its shingle stage consumes the quality gate's
+#         token array;
+#       - ann_cosine_topk, ann_cosine_filtered, ann_hard_negatives and
+#         bitext_margin_mine: their four copy-pasted brute-cosine
+#         kernels became the one similarity._cosine_topk_scan, now
+#         declared in helpers= (bitext declared none before);
+#       - doc_bm25_topk, retrieval_quality_bm25_rrf,
+#         retrieval_quality_sampled and retrieval_rrf_fusion_ivf: the
+#         shared BM25 ranker helpers (docstrings edited after the
+#         MaxScore-bounded truth scorer was deleted; the per-partition
+#         top-k stage moved into retrieval.partition_topk; the
+#         _bm25_w_col weight now takes the corpus scalars and is
+#         declared, like partition_topk, in BM25_RANKER);
+#       - retrieval_phrase_match, doc_bm25_serve,
+#         doc_bm25_serve_post_gc, bm25_index_streaming_append and
+#         bm25_index_version_diff: their declared _prune_to_buckets
+#         now calls partition_topk, and the serve path's inline BM25
+#         weight became _bm25_w_col.
+#       Every oracle text is unchanged and all 14 match at sf0.01.
 #   (b) the 26 hard-stale names (newest green row > 3 rounds old);
 #   (c) planning-cohort (exactly-3-old r11 names) fill the remaining
-#       19 slots alphabetically; the spill (20 names) heads r16.
+#       10 slots alphabetically; the spill (29 names, up from 20)
+#       heads r16 and still fits its 50-slot window.
 # Everything outside the window stays covered by tests/test_parity.py,
 # which runs the same DuckDB oracles every session. Certified-by-round
 # map: COVERAGE.md / QUERIES.md.
 GATE_ORDER = (
-    # -- changed-fingerprint (5) --
+    # -- changed-fingerprint (14) --
+    "ann_cosine_filtered",
+    "ann_cosine_topk",
+    "ann_hard_negatives",
+    "bitext_margin_mine",
+    "bm25_index_streaming_append",
+    "bm25_index_version_diff",
+    "doc_bm25_serve",
+    "doc_bm25_serve_post_gc",
     "doc_bm25_topk",
     "pipeline_clean_corpus",
+    "retrieval_phrase_match",
     "retrieval_quality_bm25_rrf",
     "retrieval_quality_sampled",
     "retrieval_rrf_fusion_ivf",
@@ -176,7 +199,7 @@ GATE_ORDER = (
     "vocab_build_encode",
     "window_dedup_latest",
     "zorder_key_events",
-    # -- planning refresh (19) --
+    # -- planning refresh (10) --
     "ann_ivf_probe",
     "asof_purchase_view",
     "corpus_decontamination",
@@ -187,15 +210,6 @@ GATE_ORDER = (
     "events_sessionize",
     "events_sessionize_streaming",
     "events_tumbling_hourly",
-    "events_tumbling_streaming",
-    "graph_triangle_count",
-    "kv_get_lookup",
-    "kv_snapshot_compaction",
-    "mixture_temperature_sample",
-    "multimodal_resize",
-    "pipeline_ccnet_filter",
-    "pipeline_decontaminated_split",
-    "q12_ship_priority",
 )
 
 # Round-15 rotation note: the r14 spill (planning-cohort names listed

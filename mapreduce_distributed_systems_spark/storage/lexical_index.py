@@ -72,15 +72,15 @@ from pyspark.sql import functions as F
 
 from mapreduce_distributed_systems_spark.functions.text import words
 from mapreduce_distributed_systems_spark.operators.retrieval import (
-    BM25_B,
-    BM25_K1,
     BM25_ORACLE,
     BM25_QUERY_CAP,
     BM25_QUERY_FILTER,
     BM25_TOP_K,
     POSTING_CAP,
     QUERY_TERMS,
+    _bm25_w_col,
     impact_prune,
+    partition_topk,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.scratch import (
@@ -287,8 +287,8 @@ def read_positional_postings(
 def _prune_to_buckets(rel: DataFrame, cap: int, n_buckets: int) -> DataFrame:
     """impact_prune fused with the write layout's bucket exchange
     (r14, guide §2.4 — two operations keyed compatibly share one
-    exchange): stage 1 is the same per-input-partition top-cap per
-    term (a superset of the global top-cap, no exchange); stage 2
+    exchange): stage 1 is the same partition_topk per term (a
+    superset of the global top-cap, no exchange); stage 2
     repartitions by the PHYSICAL bucket key tb = pmod(xxhash64(term),
     n_buckets) — hash(tb) clusters every term's rows, so the per-term
     rank window runs on that same exchange (HashPartitioning(tb)
@@ -298,13 +298,7 @@ def _prune_to_buckets(rel: DataFrame, cap: int, n_buckets: int) -> DataFrame:
     (tb, term) window partition IS the term partition) with ONE
     exchange instead of prune-by-term + repartition-by-tb. Extra
     columns (dl, positions) ride through untouched."""
-    w1 = W.partitionBy(F.spark_partition_id(), "term").orderBy(
-        F.desc("tf"), F.asc("doc_id")
-    )
-    local = rel.withColumn("_prn", F.row_number().over(w1)).where(
-        F.col("_prn") <= cap
-    ).drop("_prn")
-    local = local.withColumn(
+    local = partition_topk(rel, cap, "term", "tf", "doc_id").withColumn(
         "tb", term_bucket(F.col("term"), n_buckets)
     ).repartition("tb")
     w2 = W.partitionBy("tb", "term").orderBy(F.desc("tf"), F.asc("doc_id"))
@@ -516,10 +510,10 @@ def bm25_topk_from_index(
     list a literal, which is what lets the posting read PRUNE to the
     buckets those terms hash into instead of scanning the index.
 
-    IEEE parity with the in-query ranker: the weight expression is
-    associated identically; n_docs/avgdl literals are the same doubles
-    the build computed (json round-trips the repr exactly), so the
-    rounded sums match BM25_ORACLE bit-for-bit."""
+    IEEE parity with the in-query ranker: the weight is the same
+    _bm25_w_col expression; the n_docs/avgdl literals are the same
+    values the build computed (json round-trips the repr exactly), so
+    the rounded sums match BM25_ORACLE bit-for-bit."""
     n_docs = int(manifest["n_docs"])
     avgdl = float(manifest["avgdl"])
 
@@ -563,22 +557,7 @@ def bm25_topk_from_index(
         .select(
             "query_id",
             "doc_id",
-            (
-                F.log(
-                    F.lit(1.0)
-                    + (F.lit(n_docs) - F.col("df") + F.lit(0.5))
-                    / (F.col("df") + F.lit(0.5))
-                )
-                * (F.col("tf") * F.lit(BM25_K1 + 1.0))
-                / (
-                    F.col("tf")
-                    + F.lit(BM25_K1)
-                    * (
-                        F.lit(1.0 - BM25_B)
-                        + F.lit(BM25_B) * F.col("dl") / F.lit(avgdl)
-                    )
-                )
-            ).alias("w"),
+            _bm25_w_col(F.lit(n_docs), F.lit(avgdl)).alias("w"),
         )
     )
     agg = cand.groupBy("query_id", "doc_id").agg(
@@ -761,7 +740,7 @@ def phrase_topk_from_index(
     "posting cap, never a corpus scan. Ranked by hit count with a "
     "deterministic doc_id tiebreak.",
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
-             phrase_topk_from_index),  # VERDICT r13 #1c + r14 build
+             partition_topk, phrase_topk_from_index),
 )
 def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build+commit the index WITH its positional component, reload
@@ -794,7 +773,7 @@ def retrieval_phrase_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     # VERDICT r13 #1c + r14 single-pass build: the certified behavior
     # lives in these shared helpers
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
-             bm25_topk_from_index),
+             partition_topk, bm25_topk_from_index, _bm25_w_col),
 )
 def doc_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _scratch_dir("bm25_index_")
@@ -1068,7 +1047,7 @@ def index_version_diff(
     "incremental downstream (cache invalidation, replica shipping) "
     "consumes instead of re-reading the whole artifact.",
     helpers=(build_and_commit_bm25, append_bm25_index, write_bm25_index,
-             _prune_to_buckets, index_version_diff),  # r13 #1c + r14
+             _prune_to_buckets, partition_topk, index_version_diff),
 )
 def bm25_index_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build the base index from the even doc_id half WITH the
@@ -1226,7 +1205,8 @@ def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
     "remains — a post-GC index must return byte-identical BM25 "
     "rankings or the driver hash catches it.",
     helpers=(build_and_commit_bm25, write_bm25_index, _prune_to_buckets,
-             bm25_topk_from_index, gc_bm25_index),  # r13 #1c + r14
+             partition_topk, bm25_topk_from_index, _bm25_w_col,
+             gc_bm25_index),
 )
 def doc_bm25_serve_post_gc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered r12 (oracle: BM25_ORACLE, identical to

@@ -54,6 +54,8 @@ from mapreduce_distributed_systems_spark.operators.retrieval import (
     POSTING_CAP,
     QUERY_TERMS,
     _TOKS_DUCK,
+    _bm25_w_col,
+    partition_topk,
 )
 from mapreduce_distributed_systems_spark.scratch import (
     scratch_dir as _scratch_dir,
@@ -220,7 +222,8 @@ def run_append_stream(
     "stream discovery, per-batch merge + re-prune, manifest pointer "
     "swaps, and the serve path's frozen-stats arithmetic.",
     helpers=(build_and_commit_bm25, append_bm25_index, write_bm25_index,
-             _prune_to_buckets),  # VERDICT r13 #1c + r14 build
+             _prune_to_buckets, partition_topk, bm25_topk_from_index,
+             _bm25_w_col),
 )
 def bm25_index_streaming_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-k served from a STREAM-MAINTAINED index: base build

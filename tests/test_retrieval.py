@@ -384,14 +384,19 @@ def test_bigram_lm_inference_never_shuffles_on_text_keys(spark, sf_dir):
 
 
 def test_impact_prune_equals_naive_window_on_hot_key(spark):
-    """The two-stage prune must return EXACTLY the naive per-key
-    row_number window's rows, including on a hot key an order of
-    magnitude over the cap and ties in the value column."""
+    """The two-stage prune — in-query (impact_prune) and fused with
+    the index's bucket exchange (_prune_to_buckets) — must return
+    EXACTLY the naive per-key row_number window's rows, including on a
+    hot key an order of magnitude over the cap and ties in the value
+    column."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from mapreduce_distributed_systems_spark.operators.retrieval import (
         impact_prune,
+    )
+    from mapreduce_distributed_systems_spark.storage.lexical_index import (
+        _prune_to_buckets,
     )
 
     rows = []
@@ -405,10 +410,6 @@ def test_impact_prune_equals_naive_window_on_hot_key(spark):
         rows, "term string, doc_id long, tf long"
     ).repartition(16)
     cap = 25
-    got = {
-        (r.term, r.doc_id, r.tf)
-        for r in impact_prune(tf, cap).collect()
-    }
     w = W.partitionBy("term").orderBy(F.desc("tf"), F.asc("doc_id"))
     want = {
         (r.term, r.doc_id, r.tf)
@@ -417,14 +418,17 @@ def test_impact_prune_equals_naive_window_on_hot_key(spark):
         .drop("_rn")
         .collect()
     }
-    assert got == want
-    # and the hot key was actually pruned
-    assert sum(1 for t, _, _ in got if t == "hot") == cap
+    for pruned in (impact_prune(tf, cap),
+                   _prune_to_buckets(tf, cap, 4).drop("tb")):
+        got = {(r.term, r.doc_id, r.tf) for r in pruned.collect()}
+        assert got == want
+        # and the hot key was actually pruned
+        assert sum(1 for t, _, _ in got if t == "hot") == cap
 
 
 def test_impact_prune_matches_naive_window_on_random_data(spark):
     """Seeded random datasets (varied key skew, tie density, cap):
-    the two-stage prune == the naive window, every time."""
+    both two-stage prunes == the naive window, every time."""
     import random
 
     from pyspark.sql import Window as W
@@ -432,6 +436,9 @@ def test_impact_prune_matches_naive_window_on_random_data(spark):
 
     from mapreduce_distributed_systems_spark.operators.retrieval import (
         impact_prune,
+    )
+    from mapreduce_distributed_systems_spark.storage.lexical_index import (
+        _prune_to_buckets,
     )
 
     for seed, cap in ((1, 1), (7, 4), (42, 17)):
@@ -446,7 +453,6 @@ def test_impact_prune_matches_naive_window_on_random_data(spark):
         tf = spark.createDataFrame(
             rows, "term string, doc_id long, tf long"
         ).repartition(rng.randint(1, 8))
-        got = {tuple(r) for r in impact_prune(tf, cap).collect()}
         w = W.partitionBy("term").orderBy(F.desc("tf"), F.asc("doc_id"))
         want = {
             tuple(r)
@@ -455,4 +461,8 @@ def test_impact_prune_matches_naive_window_on_random_data(spark):
             .drop("_rn")
             .collect()
         }
-        assert got == want, (seed, cap)
+        n_buckets = rng.randint(1, 6)
+        for pruned in (impact_prune(tf, cap),
+                       _prune_to_buckets(tf, cap, n_buckets).drop("tb")):
+            got = {tuple(r) for r in pruned.collect()}
+            assert got == want, (seed, cap, n_buckets)

@@ -298,8 +298,7 @@ def test_prune_mask_lossless_under_rounded_order(ceiling):
 
     from mapreduce_distributed_systems_spark.operators.similarity import (
         _ROUND_MARGIN,
-        _consolidate_mask,
-        _prune_mask,
+        _prune_partition,
     )
 
     rng = np.random.RandomState(8)
@@ -322,26 +321,13 @@ def test_prune_mask_lossless_under_rounded_order(ceiling):
 
     survivors: list[tuple[int, int]] = []  # (query, neighbor) pairs kept
     for part in np.array_split(np.arange(n), 4):  # 4 "partitions"
-        cq, cn, cs = [], [], []
-        for batch in np.array_split(part, 3):  # 3 Arrow "batches" each
-            sb = s[batch].copy()
-            if ceiling is not None:
-                maybe = (sb > ceiling - _ROUND_MARGIN) & (
-                    sb <= ceiling + _ROUND_MARGIN
-                )
-                sd = np.where(sb <= ceiling - _ROUND_MARGIN, sb, -np.inf)
-                mask = _prune_mask(sd, k) | maybe
-            else:
-                mask = _prune_mask(sb, k)
-            ni, qi = np.nonzero(mask)
-            cq.append(q_ids[qi])
-            cn.append(ids[batch][ni])
-            cs.append(sb[ni, qi])
-        qa, na, sa = map(np.concatenate, (cq, cn, cs))
-        keep = _consolidate_mask(qa, sa, q_ids, k, ceiling=ceiling)
+        batches = [  # 3 Arrow "batches" each
+            ((ids[batch],), s[batch]) for batch in np.array_split(part, 3)
+        ]
+        qa, na, _ = _prune_partition(batches, q_ids, k, ceiling)
         # bound (b): ~k rows per query per partition (+ tie/boundary band)
         for j in range(q):
-            per_q = int((qa[keep] == j).sum())
+            per_q = int((qa == j).sum())
             band = int(
                 ((s[part][:, j] > (ceiling or 2) - _ROUND_MARGIN)
                  & (s[part][:, j] <= (ceiling or 2) + _ROUND_MARGIN)).sum()
@@ -351,7 +337,7 @@ def test_prune_mask_lossless_under_rounded_order(ceiling):
                  <= 2 * _ROUND_MARGIN).sum(axis=1).max()
             )
             assert per_q <= k + ties + band, (j, per_q, ties, band)
-        survivors += list(zip(qa[keep].tolist(), na[keep].tolist()))
+        survivors += list(zip(qa.tolist(), na.tolist()))
 
     kept = set(survivors)
     for j in range(q):
@@ -449,9 +435,7 @@ def test_prune_mask_lossless_property(ceiling):
     from hypothesis import strategies as st
 
     from mapreduce_distributed_systems_spark.operators.similarity import (
-        _ROUND_MARGIN,
-        _consolidate_mask,
-        _prune_mask,
+        _prune_partition,
     )
 
     @settings(max_examples=40, deadline=None)
@@ -478,24 +462,11 @@ def test_prune_mask_lossless_property(ceiling):
         q_ids = np.arange(q, dtype=np.int64)
         kept: set[tuple[int, int]] = set()
         for part in np.array_split(np.arange(n), 3):
-            cq, cn, cs = [], [], []
-            for batch in np.array_split(part, 2):
-                sb = s[batch].copy()
-                if ceiling is not None:
-                    maybe = (sb > ceiling - _ROUND_MARGIN) & (
-                        sb <= ceiling + _ROUND_MARGIN
-                    )
-                    sd = np.where(sb <= ceiling - _ROUND_MARGIN, sb, -np.inf)
-                    mask = _prune_mask(sd, k) | maybe
-                else:
-                    mask = _prune_mask(sb, k)
-                ni, qi = np.nonzero(mask)
-                cq.append(q_ids[qi])
-                cn.append(ids[batch][ni])
-                cs.append(sb[ni, qi])
-            qa, na, sa = map(np.concatenate, (cq, cn, cs))
-            keep = _consolidate_mask(qa, sa, q_ids, k, ceiling=ceiling)
-            kept |= set(zip(qa[keep].tolist(), na[keep].tolist()))
+            batches = [
+                ((ids[batch],), s[batch]) for batch in np.array_split(part, 2)
+            ]
+            qa, na, _ = _prune_partition(batches, q_ids, k, ceiling)
+            kept |= set(zip(qa.tolist(), na.tolist()))
         for j in range(q):
             truth = _rounded_topk(ids, s[:, j], k, ceiling=ceiling)
             missing = [nid for nid in truth if (j, nid) not in kept]
