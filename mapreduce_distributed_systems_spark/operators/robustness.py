@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 
 from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.sources import load_table
+from mapreduce_distributed_systems_spark.streaming.replay import (
+    run_to_memory,
+    stage_table,
+)
 
 # Deterministic corruption over the events.props JSON column: two real
 # failure shapes (truncation — a torn write; leading garbage — a
@@ -113,28 +117,12 @@ def _audit_agg(kframe: DataFrame) -> DataFrame:
     "where a bad record must never kill the query and loss is "
     "accounted continuously. State is O(event types); the parse is "
     "narrow; certified against the identical batch oracle.",
+    helpers=(run_to_memory,),
 )
 def events_malformed_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="ev_malformed_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     stream = spark.readStream.schema(batch.schema).parquet(src_dir)
     parsed = F.get_json_object(_corrupted_props(), "$.k").cast("int")
     agg = _audit_agg(stream.select("event_type", parsed.alias("k")))
-    name = f"ev_malformed_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="ev_malformed_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")

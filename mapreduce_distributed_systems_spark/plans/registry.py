@@ -128,7 +128,7 @@ def _load() -> None:
 # decides which queries get the hard external oracle signal. The window
 # ROTATES per round. Round-15 composition (computed mechanically by
 # tools/plan_window.py from the folded r1-r14 evidence):
-#   (a) changed-fingerprint (14):
+#   (a) changed-fingerprint (22):
 #       - pipeline_clean_corpus: its scan is spread over one partition
 #         per core and its shingle stage consumes the quality gate's
 #         token array;
@@ -146,18 +146,25 @@ def _load() -> None:
 #       - retrieval_phrase_match, doc_bm25_serve,
 #         doc_bm25_serve_post_gc, bm25_index_streaming_append and
 #         bm25_index_version_diff: their declared _prune_to_buckets
-#         now calls partition_topk, and the serve path's inline BM25
-#         weight became _bm25_w_col.
-#       Every oracle text is unchanged and all 14 match at sf0.01.
+#         now calls partition_topk, the serve path's inline BM25
+#         weight became _bm25_w_col, and their declared
+#         write_bm25_index (and, post-GC, gc_bm25_index) now goes
+#         through storage/manifest.py's commit/resolve;
+#       - the 8 memory-sink twins (the six in streaming/event_stream.py,
+#         quality_classifier_streaming, events_malformed_streaming):
+#         their bodies now call streaming/replay.py's stage_table and
+#         run_to_memory (declared in helpers=) instead of a pasted
+#         memory-sink block.
+#       Every oracle text is unchanged and all 22 match at sf0.01.
 #   (b) the 26 hard-stale names (newest green row > 3 rounds old);
 #   (c) planning-cohort (exactly-3-old r11 names) fill the remaining
-#       10 slots alphabetically; the spill (29 names, up from 20)
+#       2 slots alphabetically; the spill (33 names, up from 29)
 #       heads r16 and still fits its 50-slot window.
 # Everything outside the window stays covered by tests/test_parity.py,
 # which runs the same DuckDB oracles every session. Certified-by-round
 # map: COVERAGE.md / QUERIES.md.
 GATE_ORDER = (
-    # -- changed-fingerprint (14) --
+    # -- changed-fingerprint (22) --
     "ann_cosine_filtered",
     "ann_cosine_topk",
     "ann_hard_negatives",
@@ -167,7 +174,15 @@ GATE_ORDER = (
     "doc_bm25_serve",
     "doc_bm25_serve_post_gc",
     "doc_bm25_topk",
+    "events_attribution_streaming",
+    "events_cms_streaming",
+    "events_dedup_streaming",
+    "events_malformed_streaming",
+    "events_sessionize_streaming",
+    "events_tumbling_streaming",
+    "events_tumbling_streaming_append",
     "pipeline_clean_corpus",
+    "quality_classifier_streaming",
     "retrieval_phrase_match",
     "retrieval_quality_bm25_rrf",
     "retrieval_quality_sampled",
@@ -199,17 +214,9 @@ GATE_ORDER = (
     "vocab_build_encode",
     "window_dedup_latest",
     "zorder_key_events",
-    # -- planning refresh (10) --
+    # -- planning refresh (2) --
     "ann_ivf_probe",
     "asof_purchase_view",
-    "corpus_decontamination",
-    "dedup_embedding_cosine",
-    "dedup_paragraph_rewrite",
-    "events_json_malformed_audit",
-    "events_malformed_streaming",
-    "events_sessionize",
-    "events_sessionize_streaming",
-    "events_tumbling_hourly",
 )
 
 # Round-15 rotation note: the r14 spill (planning-cohort names listed

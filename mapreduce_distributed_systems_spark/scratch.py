@@ -1,27 +1,21 @@
-"""Process-scoped scratch-space root (round 8, generalizing ADVICE
-r7's vector_index finding): ~26 sites across the streaming twins,
-snapshot queries, and robustness checks allocate tempfile.mkdtemp()
-working dirs (stream source symlink dirs, checkpoint locations,
-snapshot bases) that a query's lazy result may still read after the
-fn returns — so none can rmtree eagerly, and every certification/
-bench/replay run used to strand them in /tmp.
+"""Process-scoped scratch-space root (round 8). Query fns allocate
+working dirs (stream sources and checkpoints, snapshot bases, index
+dirs) that their lazy result may still read after the fn returns, so
+none can be removed eagerly.
 
 ensure_process_scratch() points `tempfile.tempdir` at one fresh
-per-process root that an atexit hook removes, so EVERY mkdtemp in the
-package (and anything else in-process) lands under it and dies with
-the process — the first moment the artifacts are provably dead. This
-deliberately avoids editing the ~26 call sites: temp-dir placement
-does not change any query's RESULT, so rewriting certified fn bodies
-(and burning a 26-slot driver re-certification window) for a lifecycle
-fix would be cost without signal. Wired into both session.get_spark()
-(tests/bench/replay) and __spark_entry__ import (the external driver,
-which brings its own SparkSession and never calls get_spark).
+per-process root that an atexit hook removes, so every mkdtemp in the
+process lands under it and dies with the process. It is wired into
+session.get_spark() (tests/bench/replay) and the __spark_entry__
+import, whose caller brings its own SparkSession.
 
-scratch_dir() gives the self-contained index queries (ann_ivf_persisted,
-doc_bm25_serve, ...) a named directory under the same root: they build
-a real on-disk artifact and RETURN lazy DataFrames that read it only
-when the caller materializes them, so a per-call try/finally would
-delete the index before it is scanned.
+scratch_dir() names a directory under that root explicitly; the
+memory-sink replays (streaming/replay.py) and the index queries use
+it. Seven plain tempfile.mkdtemp() sites remain, six of them inside
+certified fn bodies (the three snapshot queries,
+bm25_index_streaming_append, bm25_index_version_diff): placement
+changes no result, so moving them is not worth re-certification
+slots.
 """
 
 from __future__ import annotations

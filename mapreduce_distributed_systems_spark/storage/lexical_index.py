@@ -12,9 +12,9 @@ probed term-bucket partitions}.
 Reference parity note: the stored postings ARE the output of the
 reference's indexer app (mrapps/indexer.go:20-39) with tf and dl
 attached — persisting them is the step the reference's text sink
-(mr/worker.go:131-138) performs after every job; the manifest commit
-protocol is the same data-before-pointer swap storage/snapshots.py
-certifies for C6 (kvraft/server.go:75-78).
+(mr/worker.go:131-138) performs after every job; the commit is
+storage/manifest.py's data-before-pointer swap, shared with the C6
+snapshots (kvraft/server.go:75-78).
 
 Layout under <base_dir>:
 
@@ -87,9 +87,15 @@ from mapreduce_distributed_systems_spark.scratch import (
     scratch_dir as _scratch_dir,
 )
 from mapreduce_distributed_systems_spark.sources import load_table
+from mapreduce_distributed_systems_spark.storage.manifest import (
+    MANIFEST_VERSION,
+    commit,
+    committed_versions,
+    resolve,
+    write_json_atomic,
+)
 
 N_TERM_BUCKETS = 32
-MANIFEST_VERSION = 1
 
 
 def term_bucket(col, n_buckets: int = N_TERM_BUCKETS):
@@ -118,10 +124,9 @@ def write_bm25_index(
     """Commit a BM25 index version: `post` is (term, doc_id, tf, dl)
     — the impact-pruned postings with doc length denormalized in —
     `terms` is (term, df) — the full dictionary — and `doclens` is
-    (doc_id, dl). All parquet writes finish BEFORE any manifest
-    appears, so a reader that resolves a manifest never sees missing
-    data; the pointer swap is the atomic commit. `stats` must carry
-    the frozen corpus scalars (n_docs, avgdl, posting_cap).
+    (doc_id, dl). All parquet writes finish before the manifest
+    commit. `stats` must carry the frozen corpus scalars (n_docs,
+    avgdl, posting_cap).
     `n_buckets` is this version's physical bucket count, recorded in
     the manifest as n_term_buckets — at 100 TB it scales with the
     index (more buckets => finer pruning and bounded files per
@@ -206,17 +211,7 @@ def write_bm25_index(
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
         for f in [pool.submit(w) for w in writes]:
             f.result()
-    ver_path = os.path.join(base_dir, f"manifest-{version:03d}.json")
-    ver_tmp = ver_path + ".tmp"
-    with open(ver_tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(ver_tmp, ver_path)
-    path = os.path.join(base_dir, "manifest.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, path)  # atomic pointer swap
-    return path
+    return commit(base_dir, version, manifest)
 
 
 def read_bm25_index(
@@ -226,24 +221,17 @@ def read_bm25_index(
     then load (postings, terms, doclens, manifest). Postings come
     back with the partition column `tb` restored as int so callers
     can partition-prune with a bucket filter."""
-    name = (
-        "manifest.json" if version is None else f"manifest-{version:03d}.json"
-    )
-    with open(os.path.join(base_dir, name)) as f:
-        manifest = json.load(f)
+    manifest = resolve(base_dir, version)
     # fail LOUDLY on a pinned read of a garbage-collected version —
     # its manifest survives as a commit record, but the bytes are gone
     # (gc_bm25_index below); without this gate the reader would die in
     # a parquet scan with a path error that hides the real cause
-    gc_path = os.path.join(base_dir, GC_LEDGER)
-    if os.path.exists(gc_path):
-        with open(gc_path) as f:
-            if str(manifest["version"]) in json.load(f):
-                raise RuntimeError(
-                    f"index version {manifest['version']} was "
-                    "garbage-collected (see gc.json); pin a retained "
-                    "version or rebuild"
-                )
+    if str(manifest["version"]) in _gc_ledger(base_dir):
+        raise RuntimeError(
+            f"index version {manifest['version']} was "
+            "garbage-collected (see gc.json); pin a retained "
+            "version or rebuild"
+        )
     post = spark.read.parquet(manifest["postings_dir"]).withColumn(
         "tb", F.col("tb").cast("int")
     )
@@ -1110,14 +1098,6 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _write_gc_ledger(base_dir: str, ledger: dict) -> None:
-    path = os.path.join(base_dir, GC_LEDGER)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ledger, f)
-    os.replace(tmp, path)
-
-
 def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
     """Collect index versions older than the newest `keep_latest`,
     reclaiming their parquet bytes. The live manifest.json version is
@@ -1136,22 +1116,17 @@ def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
     re-swept, so a crashed-and-rerun GC converges."""
     if keep_latest < 1:
         raise ValueError("keep_latest must be >= 1")
-    with open(os.path.join(base_dir, "manifest.json")) as f:
-        live_version = json.load(f)["version"]
-    versions = sorted(
-        int(name[len("manifest-") : -len(".json")])
-        for name in os.listdir(base_dir)
-        if name.startswith("manifest-") and name.endswith(".json")
-    )
+    live_version = resolve(base_dir)["version"]
+    versions = committed_versions(base_dir)
     keep = set(versions[-keep_latest:]) | {live_version}
+    ledger_path = os.path.join(base_dir, GC_LEDGER)
     ledger = _gc_ledger(base_dir)
     collected: list[int] = []
     reclaimed = 0
     for v in versions:
         if v in keep:
             continue
-        with open(os.path.join(base_dir, f"manifest-{v:03d}.json")) as f:
-            m = json.load(f)
+        m = resolve(base_dir, v)
         dirs = [
             m[key]
             for key in ("postings_dir", "terms_dir", "doclens_dir",
@@ -1169,14 +1144,14 @@ def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
                 # version converges to "bytes verifiably gone" instead
                 # of being re-stat'ed by every future GC (ADVICE r12)
                 ledger[str(v)]["swept"] = True
-                _write_gc_ledger(base_dir, ledger)
+                write_json_atomic(ledger_path, ledger)
                 continue
             # tombstoned but bytes survived a crash: finish the sweep
             freed = sum(_dir_bytes(d) for d in existing)
         else:
             freed = sum(_dir_bytes(d) for d in existing)
             ledger[str(v)] = {"reclaimed_bytes": freed}
-            _write_gc_ledger(base_dir, ledger)  # tombstone BEFORE rmtree
+            write_json_atomic(ledger_path, ledger)  # tombstone BEFORE rmtree
             collected.append(v)
         for d in existing:
             shutil.rmtree(d)
@@ -1187,7 +1162,7 @@ def gc_bm25_index(base_dir: str, keep_latest: int = 2) -> dict:
         # a finished sweep makes exact)
         ledger[str(v)]["swept"] = True
         reclaimed += freed
-    _write_gc_ledger(base_dir, ledger)
+    write_json_atomic(ledger_path, ledger)
     return {
         "collected": collected,
         "kept": sorted(keep & set(versions)),

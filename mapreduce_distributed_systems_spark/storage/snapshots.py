@@ -9,8 +9,8 @@ analogue is:
   manifest.json   {version, cutoff, data_dir, n_keys}   <- the commit
   snap-<ver>/     parquet of (key, final_value, n_effective_ops)
 
-Readers resolve the manifest first (atomic pointer — the parquet dir
-is immutable once committed), then load the snapshot and replay only
+Readers resolve the manifest first (storage/manifest.py — the parquet
+dir is immutable once committed), then load the snapshot and replay only
 the op-log tail on top. Two registered queries certify the semantics
 against the SAME full-replay DuckDB oracle family as the in-plan
 compaction (`kv_snapshot_compaction`):
@@ -31,7 +31,6 @@ pins for corpora, applied to operator state.
 
 from __future__ import annotations
 
-import json
 import os
 import tempfile
 
@@ -46,8 +45,11 @@ from mapreduce_distributed_systems_spark.operators.kv import (
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.sources import load_table
-
-MANIFEST_VERSION = 1
+from mapreduce_distributed_systems_spark.storage.manifest import (
+    MANIFEST_VERSION,
+    commit,
+    resolve,
+)
 
 
 def write_snapshot(
@@ -57,14 +59,9 @@ def write_snapshot(
     version: int = MANIFEST_VERSION,
 ) -> str:
     """Commit `state` (key, final_value, n_effective_ops) as an
-    immutable parquet snapshot + manifest pointer. Returns the
-    manifest path. The parquet write happens BEFORE the manifest is
-    written, so a reader never sees a manifest pointing at missing
-    data — the manifest write is the atomic commit point (the same
-    ordering a table-format commit protocol uses). Every commit also
-    leaves a versioned manifest-<ver>.json behind, so superseded
-    versions stay resolvable (time travel across maintenance
-    rewrites)."""
+    immutable parquet snapshot, then the manifest (storage/manifest.py:
+    data before pointer, superseded versions stay resolvable). Returns
+    the manifest path."""
     data_dir = os.path.join(base_dir, f"snap-{version:03d}")
     state.write.mode("overwrite").parquet(data_dir)
     manifest = {
@@ -73,21 +70,7 @@ def write_snapshot(
         "data_dir": data_dir,
         "n_keys": None,  # optional stats; kept null to avoid an extra job
     }
-    # the versioned manifest is a commit artifact too: time-travel reads
-    # (read_snapshot(version=...)) resolve it directly, so it gets the
-    # same tmp + atomic-replace discipline as the pointer — a crash
-    # mid-write must never leave a truncated manifest-<ver>.json behind
-    ver_path = os.path.join(base_dir, f"manifest-{version:03d}.json")
-    ver_tmp = ver_path + ".tmp"
-    with open(ver_tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(ver_tmp, ver_path)
-    path = os.path.join(base_dir, "manifest.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, path)  # atomic pointer swap
-    return path
+    return commit(base_dir, version, manifest)
 
 
 def read_snapshot(
@@ -95,9 +78,7 @@ def read_snapshot(
 ) -> tuple[DataFrame, dict]:
     """Resolve the manifest (latest, or a pinned historical version),
     then load the snapshot it points at."""
-    name = "manifest.json" if version is None else f"manifest-{version:03d}.json"
-    with open(os.path.join(base_dir, name)) as f:
-        manifest = json.load(f)
+    manifest = resolve(base_dir, version)
     return spark.read.parquet(manifest["data_dir"]), manifest
 
 

@@ -7,10 +7,10 @@ serving path is read-only.
 
 Reference parity note: the reference has no vector store — this is
 part of the LLM-data-pipeline surface the brief adds on top of the
-reference's operators (similarity search at scale). The commit
-protocol is the same one storage/snapshots.py certifies for C6
-(kvraft/server.go:75-78's snapshot-replaces-log-prefix contract,
-re-expressed as data-before-manifest atomic pointer commits).
+reference's operators (similarity search at scale). The commit is
+storage/manifest.py's data-before-pointer swap, shared with the C6
+snapshots (kvraft/server.go:75-78's snapshot-replaces-log-prefix
+contract).
 
 Layout under <base_dir>:
 
@@ -44,7 +44,6 @@ identical to compact_snapshot's protocol.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -64,8 +63,11 @@ from mapreduce_distributed_systems_spark.operators.similarity import (
     _kmeans_cells_sql,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
-
-MANIFEST_VERSION = 1
+from mapreduce_distributed_systems_spark.storage.manifest import (
+    MANIFEST_VERSION,
+    commit,
+    resolve,
+)
 
 # Scratch dirs for the self-contained index queries live under the
 # per-process scratch root removed at exit (see scratch.py for the
@@ -85,9 +87,7 @@ def write_ivf_index(
     """Commit an IVF index: `codes` is (vec_id, qv, cell) — the
     quantized vectors with their final cell assignment — and `cells`
     is (cell, cv) — the learned centroids. Both parquet writes finish
-    BEFORE any manifest appears, so a reader that resolves a manifest
-    never sees missing data; the pointer swap is the atomic commit.
-    Returns the pointer path."""
+    before the manifest commit. Returns the pointer path."""
     codes_dir = os.path.join(base_dir, f"codes-{version:03d}")
     cents_dir = os.path.join(base_dir, f"centroids-{version:03d}")
     # cell-partitioned code lists: the probe's candidate read prunes to
@@ -109,17 +109,7 @@ def write_ivf_index(
         "centroids_dir": cents_dir,
         **(meta or {}),
     }
-    ver_path = os.path.join(base_dir, f"manifest-{version:03d}.json")
-    ver_tmp = ver_path + ".tmp"
-    with open(ver_tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(ver_tmp, ver_path)
-    path = os.path.join(base_dir, "manifest.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, path)  # atomic pointer swap
-    return path
+    return commit(base_dir, version, manifest)
 
 
 def read_ivf_index(
@@ -128,9 +118,7 @@ def read_ivf_index(
     """Resolve the manifest (latest, or a pinned historical version),
     then load (codes, cells, manifest). `codes` comes back with the
     partition column `cell` restored as int."""
-    name = "manifest.json" if version is None else f"manifest-{version:03d}.json"
-    with open(os.path.join(base_dir, name)) as f:
-        manifest = json.load(f)
+    manifest = resolve(base_dir, version)
     codes = spark.read.parquet(manifest["codes_dir"]).withColumn(
         "cell", F.col("cell").cast("int")
     )

@@ -20,10 +20,6 @@ oracle certify the pair.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +30,10 @@ from mapreduce_distributed_systems_spark.operators.quality import (
     _CLS_WMOD,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
+from mapreduce_distributed_systems_spark.streaming.replay import (
+    run_to_memory,
+    stage_table,
+)
 
 
 def _score_expr() -> str:
@@ -66,16 +66,11 @@ def _score_expr() -> str:
     "batch oracle, so the hash match certifies that the streaming "
     "expression arithmetic is bit-identical to the batch "
     "explode/groupBy plan.",
+    helpers=(run_to_memory,),
 )
 def quality_classifier_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # FileStreamSource wants a directory; the sf dirs ship single
-    # parquet FILES, so stage a symlink dir (the ingestion-folder
-    # shape a crawler actually drops files into)
-    src_dir = tempfile.mkdtemp(prefix="cls_stream_src_")
-    os.symlink(
-        f"{sf_dir}/documents.parquet", f"{src_dir}/documents-0.parquet"
-    )
+    src_dir = stage_table(sf_dir, "documents")
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
     from mapreduce_distributed_systems_spark.functions.text import words
 
@@ -92,16 +87,4 @@ def quality_classifier_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label", F.when(F.col("score") > 0, "keep").otherwise("drop")
         )
     )
-    name = f"clsstream_{uuid.uuid4().hex[:8]}"
-    query = (
-        scored.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="cls_stream_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(scored, "append")

@@ -21,10 +21,6 @@ map-side exactly like the batch plan.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,6 +30,10 @@ from mapreduce_distributed_systems_spark.operators.events import (
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.sources.tables import normalize_ts
+from mapreduce_distributed_systems_spark.streaming.replay import (
+    run_to_memory,
+    stage_table,
+)
 
 # Nominal sentinel offset: far enough past max(ts) that the sentinel
 # can never merge into a real 30-minute session, in every ts
@@ -79,13 +79,11 @@ def _write_sentinel(raw: DataFrame, src_dir: str, event_type: str) -> None:
     doc="Streaming tumbling 1-hour window aggregation with a 2h "
     "watermark (readStream -> window agg -> append memory sink, "
     "availableNow), gated against the identical batch oracle.",
+    helpers=(run_to_memory,),
 )
 def events_tumbling_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    # the file source requires a directory; expose the single events
-    # file through a temp dir of symlinks (zero-copy)
-    src_dir = tempfile.mkdtemp(prefix="ev_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     # normalize_ts: watermarks require TIMESTAMP (LTZ) — covers the
     # bigint-ns and TIMESTAMP_NTZ parquet representations alike
     stream = normalize_ts(spark.readStream.schema(batch.schema).parquet(src_dir))
@@ -97,17 +95,7 @@ def events_tumbling_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
         )
     )
-    name = f"ev_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ev_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 @register(
@@ -126,11 +114,11 @@ def events_tumbling_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch oracle, certifying the append/watermark close path that "
     "the complete-mode twin (events_tumbling_streaming) does not "
     "exercise.",
+    helpers=(run_to_memory,),
 )
 def events_tumbling_streaming_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="evap_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     _write_sentinel(raw, src_dir, event_type="zz-sentinel")
     stream = normalize_ts(
         spark.readStream.schema(raw.schema)
@@ -145,17 +133,7 @@ def events_tumbling_streaming_append(spark: SparkSession, sf_dir: str) -> DataFr
             F.col("w.start").alias("window_start"), "event_type", "n", "total_value"
         )
     )
-    name = f"evap_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="evap_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).where(F.col("event_type") != "zz-sentinel")
+    return run_to_memory(agg, "append").where(F.col("event_type") != "zz-sentinel")
 
 
 @register(
@@ -168,11 +146,11 @@ def events_tumbling_streaming_append(spark: SparkSession, sf_dir: str) -> DataFr
     "gated against the identical batch-sessionize oracle. In a 24/7 "
     "deployment the watermark closes sessions continuously and no "
     "sentinel is needed.",
+    helpers=(run_to_memory,),
 )
 def events_sessionize_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="sess_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     # sentinel flushes all sessions out of append-mode state
     # (user_id = -1, filtered from the output)
     _write_sentinel(raw, src_dir, event_type="view")
@@ -194,17 +172,7 @@ def events_sessionize_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "user_id", "session_start", "last_event_ts", "n_events", "total_value"
         )
     )
-    name = f"sess_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sess_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name).where(F.col("user_id") != -1)
+    return run_to_memory(agg, "append").where(F.col("user_id") != -1)
 
 
 ATTRIBUTION_ORACLE = """
@@ -229,11 +197,11 @@ FROM events v JOIN events p
     "sides' state grows forever). Inner-join matches emit as soon as "
     "both rows have arrived, so the finite availableNow replay needs "
     "no sentinel; the oracle is the identical batch interval join.",
+    helpers=(run_to_memory,),
 )
 def events_attribution_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="evattr_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     stream = normalize_ts(spark.readStream.schema(raw.schema).parquet(src_dir))
     views = (
         stream.where(F.col("event_type") == "view")
@@ -260,17 +228,7 @@ def events_attribution_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND purchase_ts <= view_ts + INTERVAL 1 HOUR"
         ),
     ).select("view_id", "purchase_id", "user_id")
-    name = f"evattr_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="evattr_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(joined, "append")
 
 
 DEDUP_STREAM_ORACLE = """
@@ -294,13 +252,12 @@ FROM events GROUP BY event_type
     "contract: state is bounded by the redelivery horizon (the "
     "watermark delay), not by stream lifetime — the unbounded-state "
     "dropDuplicates variant cannot run 24/7 at 100 TB/day.",
+    helpers=(run_to_memory,),
 )
 def events_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="evdd_stream_src_")
     # at-least-once delivery: the same file visible twice
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events-a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events-b.parquet")
+    src_dir = stage_table(sf_dir, "events", copies=2)
     stream = normalize_ts(spark.readStream.schema(raw.schema).parquet(src_dir))
     deduped = stream.withWatermark("ts", "2 hours").dropDuplicatesWithinWatermark(
         ["event_id"]
@@ -309,17 +266,7 @@ def events_dedup_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped.groupBy("event_type")
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
     )
-    name = f"evdd_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="evdd_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(agg, "complete")
 
 
 # --------------------------------------------------------------------------
@@ -379,11 +326,11 @@ GROUP BY p.w
     "linear, so increment-as-you-go == aggregate-then-insert), then "
     f"probed for the top-{CMS_TOP} users next to their exact counts "
     "and the one-sided overestimate.",
+    helpers=(run_to_memory,),
 )
 def events_cms_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src_dir = tempfile.mkdtemp(prefix="evcms_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
+    src_dir = stage_table(sf_dir, "events")
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
     uid = F.col("user_id").cast("string")
     fan = stream.select(
@@ -400,17 +347,7 @@ def events_cms_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("rc")
     ).select("rc.r", "rc.b")
     cells_q = fan.groupBy("r", "b").agg(F.count("*").alias("cell"))
-    name = f"evcms_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        cells_q.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="evcms_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    cells = spark.table(name)
+    cells = run_to_memory(cells_q, "complete")
     # batch side: exact counts for the candidate probe (calibration
     # column, exactly as in the batch CMS query)
     cnt = (

@@ -30,9 +30,9 @@ at 100 TB becomes per-touched-bucket (the documented parquet-dir
 versioning trade-off in storage/lexical_index.py).
 
 Reference parity: the stream is the reference's indexer app
-(mrapps/indexer.go:20-39) run as a resident job; the commit-per-batch
-protocol is the same data-before-pointer swap storage/snapshots.py
-certifies for C6 (kvraft/server.go:75-78).
+(mrapps/indexer.go:20-39) run as a resident job; each batch commits
+through storage/manifest.py's data-before-pointer swap, the C6
+commit (kvraft/server.go:75-78).
 """
 
 from __future__ import annotations
@@ -157,9 +157,10 @@ def stage_stream_source(
 ) -> str:
     """Write `docs` as `n_files` parquet files with ascending
     modification times so FileStreamSource discovers them in a
-    deterministic order (it sorts by mod time) — the prefix-partition
-    staging every streaming twin in this repo uses. Files partition
-    rows by doc_id range, so each file is a reproducible microbatch."""
+    deterministic order (it sorts by mod time). Files partition rows
+    by doc_id range, so each file is a reproducible microbatch — unlike
+    the memory-sink twins, which stream one symlinked table file
+    (streaming/replay.stage_table)."""
     src = tempfile.mkdtemp(prefix=prefix)
     pdf = docs.toPandas().sort_values("doc_id").reset_index(drop=True)
     n = len(pdf)

@@ -18,9 +18,6 @@ periodic state snapshot to a sink (the C6 compaction analogue).
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -33,6 +30,10 @@ from mapreduce_distributed_systems_spark.operators.kv import (
     OP_CASE_SQL,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
+from mapreduce_distributed_systems_spark.streaming.replay import (
+    run_to_memory,
+    stage_table,
+)
 
 STATE_SCHEMA = "final_value string, eff long, writes_seen long"
 OUTPUT_SCHEMA = (
@@ -79,13 +80,9 @@ def streamed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (spark.sql.legacy.parquet.nanosAsLong) and stays ns — only the
     # total order matters for replay
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the file source requires a directory; expose the single events
-    # file through a temp dir of symlinks (zero-copy)
-    src_dir = tempfile.mkdtemp(prefix="kv_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
     stream = (
         spark.readStream.schema(batch_schema)
-        .parquet(src_dir)
+        .parquet(stage_table(sf_dir, "events"))
         .select(
             (F.col("user_id") % 20).cast("string").alias("key"),
             F.expr(OP_CASE_SQL).alias("op"),
@@ -102,17 +99,7 @@ def streamed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"kv_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        folded.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="kv_stream_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    sink = spark.table(name)
+    sink = run_to_memory(folded, "update")
     # several batches may each emit a row per key; final = max writes_seen
     from pyspark.sql import Window as W
 

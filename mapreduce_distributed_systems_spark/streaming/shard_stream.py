@@ -28,9 +28,6 @@ contract as kv_stream.py.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -43,6 +40,10 @@ from mapreduce_distributed_systems_spark.operators.shard import (
     MIGRATION_OLD,
 )
 from mapreduce_distributed_systems_spark.plans.registry import register
+from mapreduce_distributed_systems_spark.streaming.replay import (
+    run_to_memory,
+    stage_table,
+)
 
 # ops served by the OLD owner before the shard hands off; small enough
 # that every shard at every test SF has post-handoff traffic (the
@@ -106,11 +107,9 @@ def streamed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_session_compat(spark)
     batch_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    src_dir = tempfile.mkdtemp(prefix="shard_stream_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{src_dir}/events.parquet")
     stream = (
         spark.readStream.schema(batch_schema)
-        .parquet(src_dir)
+        .parquet(stage_table(sf_dir, "events"))
         .select(
             (
                 F.ascii(
@@ -131,19 +130,7 @@ def streamed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"shard_stream_{uuid.uuid4().hex[:8]}"
-    query = (
-        folded.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="shard_stream_ckpt_")
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    sink = spark.table(name)
+    sink = run_to_memory(folded, "update")
 
     # final state per shard = the update with the highest ops_seen
     from pyspark.sql import Window as W

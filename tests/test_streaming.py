@@ -847,3 +847,29 @@ def test_classifier_stream_is_stateless_map_only(spark, sf_dir):
         for r in get_spec("quality_classifier_score").fn(spark, sf_dir).collect()
     }
     assert twin == batch and len(twin) > 0
+
+
+def test_run_to_memory_raises_a_failed_batch(spark, sf_dir):
+    """A batch that raises must surface as the streaming exception —
+    never as an empty or partial memory table — and leave no query
+    active behind it."""
+    from pyspark.errors import StreamingQueryException
+
+    from mapreduce_distributed_systems_spark.streaming.replay import (
+        run_to_memory,
+        stage_table,
+    )
+
+    @F.udf("long")
+    def planted_failure(event_id):
+        raise ValueError("planted batch failure")
+
+    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    stream = (
+        spark.readStream.schema(raw.schema)
+        .parquet(stage_table(sf_dir, "events"))
+        .select(planted_failure("event_id").alias("x"))
+    )
+    with pytest.raises(StreamingQueryException, match="planted batch failure"):
+        run_to_memory(stream, "append")
+    assert spark.streams.active == []
