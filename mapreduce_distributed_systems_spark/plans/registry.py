@@ -128,7 +128,7 @@ def _load() -> None:
 # decides which queries get the hard external oracle signal. The window
 # ROTATES per round. Round-15 composition (computed mechanically by
 # tools/plan_window.py from the folded r1-r14 evidence):
-#   (a) changed-fingerprint (22):
+#   (a) changed-fingerprint (23):
 #       - pipeline_clean_corpus: its scan is spread over one partition
 #         per core and its shingle stage consumes the quality gate's
 #         token array;
@@ -154,20 +154,24 @@ def _load() -> None:
 #         quality_classifier_streaming, events_malformed_streaming):
 #         their bodies now call streaming/replay.py's stage_table and
 #         run_to_memory (declared in helpers=) instead of a pasted
-#         memory-sink block.
-#       Every oracle text is unchanged and all 22 match at sf0.01.
+#         memory-sink block;
+#       - ann_ivf_index_append: its centroid table enters Spark as a
+#         pandas frame (Arrow) instead of a Python list, and the frozen
+#         centroids are collected unsorted and ordered on the driver.
+#       Every oracle text is unchanged and all 23 match at sf0.01.
 #   (b) the 26 hard-stale names (newest green row > 3 rounds old);
 #   (c) planning-cohort (exactly-3-old r11 names) fill the remaining
-#       2 slots alphabetically; the spill (33 names, up from 29)
-#       heads r16 and still fits its 50-slot window.
+#       slot alphabetically; the spill (34 names, up from 33) heads
+#       r16 and still fits its 50-slot window.
 # Everything outside the window stays covered by tests/test_parity.py,
 # which runs the same DuckDB oracles every session. Certified-by-round
 # map: COVERAGE.md / QUERIES.md.
 GATE_ORDER = (
-    # -- changed-fingerprint (22) --
+    # -- changed-fingerprint (23) --
     "ann_cosine_filtered",
     "ann_cosine_topk",
     "ann_hard_negatives",
+    "ann_ivf_index_append",
     "bitext_margin_mine",
     "bm25_index_streaming_append",
     "bm25_index_version_diff",
@@ -214,9 +218,8 @@ GATE_ORDER = (
     "vocab_build_encode",
     "window_dedup_latest",
     "zorder_key_events",
-    # -- planning refresh (2) --
+    # -- planning refresh (1) --
     "ann_ivf_probe",
-    "asof_purchase_view",
 )
 
 # Round-15 rotation note: the r14 spill (planning-cohort names listed

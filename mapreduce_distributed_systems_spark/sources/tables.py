@@ -10,7 +10,11 @@ text ≙ whole file contents.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -57,13 +61,54 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
+# Session confs that change the schema Spark infers from a parquet
+# footer; a memoized schema is valid only under the same values.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+# (file identity, inference confs) -> inferred schema; two threads that
+# load one new file at once both infer it and store the same value
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key for `path`: its identity (path, inode, size,
+    mtime_ns) plus the inference confs, so a file rewritten in place or
+    a session that infers types differently misses the memo. None for
+    anything that is not a local regular file (a directory of part
+    files, a remote URI): those are inferred on every load."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    return (path, st.st_ino, st.st_size, st.st_mtime_ns, confs)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one source table. Spark infers a parquet schema with a job
+    that reads the file footer; the schema of a given file under given
+    confs never changes, so it is inferred once per process and later
+    loads read with it and start no job."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     from mapreduce_distributed_systems_spark.session import ensure_session_compat
 
     ensure_session_compat(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = _schema_key(spark, path)
+    if key in _SCHEMAS:
+        df = spark.read.schema(_SCHEMAS[key]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if key is not None:
+            _SCHEMAS[key] = df.schema
     if name == "events":
         df = normalize_ts(df)
     return df

@@ -14,10 +14,17 @@ contract).
 
 Layout under <base_dir>:
 
-  manifest.json            {version, k, dim, n_vectors, ...}  <- pointer
+  manifest.json            {version, codes_dir, centroids_dir,
+                            codes_schema, centroids_schema,
+                            <caller meta>}  <- pointer
   manifest-<ver>.json      immutable per-version commit record
   centroids-<ver>/         parquet (cell int, cv array<bigint>)
-  codes-<ver>/             parquet (vec_id, qv) PARTITIONED BY cell
+  codes-<ver>/             parquet (vec_id, qv[, gen]) PARTITIONED BY cell
+
+The two *_schema entries are the components' schemas (the JSON form
+of a StructType), recorded at write time: the store wrote the files,
+so a read never re-infers their schema from parquet footers (an
+inference is one Spark job per component read).
 
 Why codes are partitioned by cell: the IVF probe touches only
 n_probe of k cells, and with the code lists laid out as cell=<c>/
@@ -48,6 +55,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from mapreduce_distributed_systems_spark.operators.kmeans import (
     kmeans_fit_int8,
@@ -103,10 +111,20 @@ def write_ivf_index(
         "cell"
     ).parquet(codes_dir)
     cells.write.mode("overwrite").parquet(cents_dir)
+    # the columns a parquet read of each dir yields: the partition
+    # column moves last and comes back as int (the type Spark infers
+    # for the cell=<c> directory values); a file source reads every
+    # field as nullable whatever the recorded schema says
+    codes_schema = StructType(
+        [f for f in codes.schema.fields if f.name != "cell"]
+        + [StructField("cell", IntegerType())]
+    )
     manifest = {
         "version": version,
         "codes_dir": codes_dir,
         "centroids_dir": cents_dir,
+        "codes_schema": codes_schema.jsonValue(),
+        "centroids_schema": cells.schema.jsonValue(),
         **(meta or {}),
     }
     return commit(base_dir, version, manifest)
@@ -116,13 +134,17 @@ def read_ivf_index(
     spark: SparkSession, base_dir: str, version: int | None = None
 ) -> tuple[DataFrame, DataFrame, dict]:
     """Resolve the manifest (latest, or a pinned historical version),
-    then load (codes, cells, manifest). `codes` comes back with the
-    partition column `cell` restored as int."""
+    then load (codes, cells, manifest), each component read with the
+    schema its manifest records, so the read infers nothing and starts
+    no job. `codes` is (<data columns>, cell int): the partition
+    column `cell` comes last."""
     manifest = resolve(base_dir, version)
-    codes = spark.read.parquet(manifest["codes_dir"]).withColumn(
-        "cell", F.col("cell").cast("int")
-    )
-    cells = spark.read.parquet(manifest["centroids_dir"])
+    codes = spark.read.schema(
+        StructType.fromJson(manifest["codes_schema"])
+    ).parquet(manifest["codes_dir"])
+    cells = spark.read.schema(
+        StructType.fromJson(manifest["centroids_schema"])
+    ).parquet(manifest["centroids_dir"])
     return codes, cells, manifest
 
 
@@ -294,6 +316,7 @@ ORDER BY c.cell"""
 )
 def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
+    import pandas as pd
 
     from mapreduce_distributed_systems_spark.operators.kmeans import (
         assign_carry_int8,
@@ -316,8 +339,17 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = kmeans_fit_int8(
         q8b, k=ivf_k_for(n_b), n_iter=IVF_KMEANS_ITER, n=n_b
     )
+    # a pandas frame enters Spark through Arrow; a Python list would go
+    # through parallelize and re-pickle on Python workers in every job
+    # over the table. tolist() keeps plain ints, which the non-Arrow
+    # path (a session with Arrow off) also accepts.
     cells = spark.createDataFrame(
-        [(int(c), [int(x) for x in cents[c]]) for c in range(len(cents))],
+        pd.DataFrame(
+            {
+                "cell": np.arange(len(cents), dtype=np.int32),
+                "cv": np.asarray(cents, dtype=np.int64).tolist(),
+            }
+        ),
         "cell int, cv array<bigint>",
     )
     # one narrow assign pass CARRYING qv (r13 optimization): the former
@@ -337,8 +369,11 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the incremental refresh: everything below runs off the COMMITTED
     # artifact — centroids come from the stored table, not the fit
     codes_v1, cells_v1, _m = read_ivf_index(spark, base_dir, version=1)
+    # an orderBy over k rows would cost Spark a sort's jobs; order the
+    # one unsorted collect on the driver
     frozen = np.array(
-        [r["cv"] for r in cells_v1.orderBy("cell").collect()], dtype=np.int64
+        [r["cv"] for r in sorted(cells_v1.collect(), key=lambda r: r["cell"])],
+        dtype=np.int64,
     )
     new = emb.where(F.col("vec_id") % 2 == 1)
     q8n = quantize_int8(new)

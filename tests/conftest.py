@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -21,3 +23,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@contextlib.contextmanager
+def _job_group(sc):
+    group = f"jobs-{uuid.uuid4().hex}"
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """`with jobs_started() as ids:` — after the block, `ids` holds the
+    ids of the Spark jobs the block started."""
+    return lambda: _job_group(spark.sparkContext)

@@ -8,6 +8,7 @@ import json
 import os
 import tempfile
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from mapreduce_distributed_systems_spark.plans.registry import get_spec
@@ -116,6 +117,17 @@ def test_persisted_serving_equals_refit(spark, sf_dir):
     assert a == b
 
 
+def _append_in(spark, sf_dir, base):
+    """Run the registered ann_ivf_index_append with its scratch dir
+    pinned to `base`, so the test can read the versions it commits."""
+    real_mkdtemp = tempfile.mkdtemp
+    try:
+        tempfile.mkdtemp = lambda prefix=None, **kw: base  # pin the dir
+        return get_spec("ann_ivf_index_append").fn(spark, sf_dir).collect()
+    finally:
+        tempfile.mkdtemp = real_mkdtemp
+
+
 def test_append_preserves_base_codes_and_centroids(spark, sf_dir):
     """The incremental append (ann_ivf_index_append) must (a) cover
     the whole corpus across the two generations, (b) leave version 1
@@ -123,8 +135,8 @@ def test_append_preserves_base_codes_and_centroids(spark, sf_dir):
     with the SAME centroid table — frozen, not refit."""
     from mapreduce_distributed_systems_spark.sources import load_table
 
-    stats = get_spec("ann_ivf_index_append").fn(spark, sf_dir)
-    rows = stats.collect()
+    base = tempfile.mkdtemp(prefix="ivf_append_test_")
+    rows = _append_in(spark, sf_dir, base)
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     n_base = emb.where(F.col("vec_id") % 2 == 0).count()
@@ -133,6 +145,66 @@ def test_append_preserves_base_codes_and_centroids(spark, sf_dir):
     # every appended vector landed in a learned cell (k rows, all cells
     # present exactly once)
     assert len(rows) == len({r["cell"] for r in rows})
+    # (b) a pinned v1 read holds exactly the base split, all gen 1
+    codes_v1, cells_v1, _ = read_ivf_index(spark, base, version=1)
+    base_ids = sorted(
+        r.vec_id for r in emb.where(F.col("vec_id") % 2 == 0).collect()
+    )
+    v1 = codes_v1.select("vec_id", "gen").collect()
+    assert sorted(r.vec_id for r in v1) == base_ids
+    assert {r.gen for r in v1} == {1}
+    # (c) v2 serves v1's centroid rows unchanged
+    _codes_v2, cells_v2, m2 = read_ivf_index(spark, base)
+    assert m2["version"] == 2
+    assert sorted((r.cell, tuple(r.cv)) for r in cells_v2.collect()) == sorted(
+        (r.cell, tuple(r.cv)) for r in cells_v1.collect()
+    )
+
+
+def test_append_without_arrow_matches(spark, sf_dir):
+    """The centroid table enters Spark as a pandas frame; a session
+    with Arrow off (an externally built one) takes the row path and
+    must give the same result."""
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    fn = get_spec("ann_ivf_index_append").fn
+    want = fn(spark, sf_dir).collect()
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        got = fn(spark, sf_dir).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert got == want
+
+
+def test_read_ivf_index_starts_no_job(spark, jobs_started):
+    """A committed index is read with the schemas its manifest
+    records: no footer inference job, and the same schemas an
+    inferring read would give."""
+    codes = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "vec_id": [1, 2, 3],
+                "qv": [[1, -2], [3, 4], [0, 5]],
+                "cell": [0, 1, 1],
+            }
+        ),
+        "vec_id bigint, qv array<bigint>, cell int",
+    )
+    cells = spark.createDataFrame(
+        pd.DataFrame({"cell": [0, 1], "cv": [[1, 1], [2, 3]]}),
+        "cell int, cv array<bigint>",
+    )
+    base = tempfile.mkdtemp(prefix="ivf_read_jobs_")
+    write_ivf_index(codes, cells, base)
+    with jobs_started() as ids:
+        codes2, cells2, manifest = read_ivf_index(spark, base)
+    assert ids == []
+    assert codes2.schema == spark.read.parquet(manifest["codes_dir"]).schema
+    assert cells2.schema == spark.read.parquet(manifest["centroids_dir"]).schema
+    assert sorted((r.vec_id, tuple(r.qv), r.cell) for r in codes2.collect()) == [
+        (1, (1, -2), 0), (2, (3, 4), 1), (3, (0, 5), 1)
+    ]
 
 
 def test_compaction_is_content_invisible_and_merges_files(spark, sf_dir):
@@ -154,15 +226,8 @@ def test_compaction_is_content_invisible_and_merges_files(spark, sf_dir):
     # build a fragmented index: the registered append query leaves a
     # 2-generation version 2 behind in its own tempdir, so rebuild the
     # same shape here to know base_dir
-    import mapreduce_distributed_systems_spark.storage.vector_index as vi
-
     base = tempfile.mkdtemp(prefix="ivf_compact_")
-    real_mkdtemp = tempfile.mkdtemp
-    try:
-        tempfile.mkdtemp = lambda prefix=None, **kw: base  # pin the dir
-        get_spec("ann_ivf_index_append").fn(spark, sf_dir).collect()
-    finally:
-        tempfile.mkdtemp = real_mkdtemp
+    _append_in(spark, sf_dir, base)
 
     before, cells_b, m2 = read_ivf_index(spark, base)
     files_before = glob.glob(f"{base}/codes-002/*/*.parquet")
