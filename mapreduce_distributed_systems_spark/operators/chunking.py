@@ -4,13 +4,14 @@ exact dedup (boilerplate paragraphs repeat across documents far more
 than whole documents do, so dedup at chunk granularity catches mass
 that doc-level exact dedup structurally cannot).
 
-STAGED (r13/r14 registration candidates per the plans/registry.py
-rotation discipline): code + DuckDB oracles + dual-fixture parity
-tests ship WITHOUT @register lines; registering each later is one
-decorator. Complements the existing stack: packing.py packs token
-budgets for TRAINING batches, dup_spans.py measures/rewrites
-duplicated k-gram mass; this module produces the chunk RELATION
-itself — the unit a vector index ingests — and scores its dup rate.
+Registered as ONE rel-keyed query, doc_chunking, whose two legs are
+chunk_relation and chunk_dedup_stats over the documents table; each
+leg's standalone oracle (CHUNK_SPLIT_ORACLE, CHUNK_DEDUP_ORACLE) is
+pinned by tests/test_chunking.py. Complements the existing stack:
+packing.py packs token budgets for TRAINING batches, dup_spans.py
+measures/rewrites duplicated k-gram mass; this module produces the
+chunk RELATION itself — the unit a vector index ingests — and scores
+its dup rate.
 
 Chunking rule (the standard overlapping-window scheme): tokens are
 the reference-exact [^\\p{L}]+ letter runs (functions/text.py, the
@@ -157,25 +158,6 @@ def chunk_dedup_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_chunk_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The chunk relation over the documents table (oracle when run
-    standalone: CHUNK_SPLIT_ORACLE) — one row per overlapping
-    64-token window at stride 48, content certified through
-    chunk_md5. Registered THROUGH doc_chunking's 'chunk' leg (the
-    third documented registry-ceiling merge, plans/registry.py);
-    the callable stays for composition (chunk -> embed -> ANN
-    ingest) and for tests/test_chunking.py's parity pins."""
-    return chunk_relation(load_table(spark, sf_dir, "documents"))
-
-
-def doc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source chunk-level exact-dedup rates on the documents
-    table (oracle when run standalone: CHUNK_DEDUP_ORACLE).
-    Registered THROUGH doc_chunking's 'stats' leg — see
-    doc_chunk_split."""
-    return chunk_dedup_stats(load_table(spark, sf_dir, "documents"))
-
-
 # Both chunking relations under one rel key — the third documented
 # registry-ceiling merge (plans/registry.py: the rotation note
 # pre-identified exactly this pair as merge candidates before either
@@ -231,9 +213,10 @@ def _null_cols(**types: str) -> list:
 def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered r13 (oracle: CHUNKING_DUAL_ORACLE): the chunk
     relation and its per-source dedup rates under one rel key, each
-    leg the staged callable's exact plan. No shared cache: the chunk
-    relation is corpus-sized (caching it is wrong at 100 TB); the
-    double documents scan is two narrow map passes."""
+    leg the exact plan of chunk_relation or chunk_dedup_stats. No
+    shared cache: the chunk relation is corpus-sized (caching it is
+    wrong at 100 TB); the double documents scan is two narrow map
+    passes."""
     docs = load_table(spark, sf_dir, "documents")
     chunk_leg = chunk_relation(docs).select(
         F.lit("chunk").alias("rel"), "doc_id", "chunk_idx", "n_tokens",

@@ -106,18 +106,6 @@ _NGRAM_SID_SPARK = (
 )
 
 
-def dup_ngram_instances(docs: DataFrame) -> DataFrame:
-    """(doc_id, sid) — one row per k-gram POSITION (duplicates kept:
-    within-document repeats are dedup targets too). Narrow: tokenize,
-    slide, hash, explode — the k-gram string dies in the map stage."""
-    toks = docs.select("doc_id", words("text").alias("t")).where(
-        F.size("t") >= DUP_NGRAM_K
-    )
-    return toks.select(
-        "doc_id", F.explode(F.expr(_NGRAM_SID_SPARK)).alias("sid")
-    )
-
-
 def dup_ngram_mass(docs: DataFrame) -> DataFrame:
     """Per-source duplicated k-gram mass over any (doc_id, source,
     text) frame — the singleton-complement plan documented in the

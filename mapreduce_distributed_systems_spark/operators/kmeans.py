@@ -5,12 +5,13 @@ DataFrame steps, state persisted between iterations).
 Everything is deterministic and engine-portable:
 - init: the k vectors with the smallest md5(vec_id) (content-addressed
   seeding, no RNG);
-- fixed N_ITER Lloyd steps; distance ties broken by cell id;
+- fixed N_ITER_INT8 Lloyd steps; distance ties broken by cell id;
 - empty cells keep their previous centroid.
 
-No SQL oracle (iterative; SURVEY.md §2.D has no Catalyst analogue) —
-the driver records a rows-only check and tests/test_kmeans.py pins:
-determinism, monotone non-increasing inertia, assignment completeness.
+The fit is integer-exact (see the section below), so kmeans_cells and
+the IVF family are hash-certified against unrolled-SQL DuckDB oracles;
+tests/test_kmeans.py pins the fit's sample lever, the driver-side fit
+and the two-level router.
 
 Scale: each iteration is one broadcast (k x dim centroids, driver
 side) + one narrow pass computing argmin + one groupBy(cell) shuffle
@@ -28,81 +29,15 @@ from mapreduce_distributed_systems_spark.plans.registry import register
 from mapreduce_distributed_systems_spark.sources import load_table
 
 K = 8
-N_ITER = 3
-
-
-def _init_centroids(emb: DataFrame) -> np.ndarray:
-    seeds = (
-        emb.select("vec_id", "v", F.md5(F.col("vec_id").cast("string")).alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(K)
-        .collect()
-    )
-    return np.array([r.v for r in seeds], dtype=np.float64)
-
-
-def _assign(emb: DataFrame, cents: np.ndarray) -> DataFrame:
-    """Narrow pass: argmin_{c} ||v - cent_c||^2, ties -> lower cell id."""
-    import pandas as pd
-
-    bc = cents  # shipped in the task closure (k x d, tiny)
-
-    def assign_batch(batches):
-        for pdf in batches:
-            m = np.array(list(pdf["v"]), dtype=np.float64)
-            d2 = ((m[:, None, :] - bc[None, :, :]) ** 2).sum(axis=2)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cell": d2.argmin(axis=1).astype("int32"),
-                    "dist2": d2.min(axis=1),
-                }
-            )
-
-    return emb.mapInPandas(
-        assign_batch, schema="vec_id long, cell int, dist2 double"
-    )
-
-
-def kmeans_fit(emb: DataFrame) -> tuple[DataFrame, np.ndarray, list[float]]:
-    """Run N_ITER Lloyd steps; returns (assignments, centroids,
-    per-iteration inertia)."""
-    cents = _init_centroids(emb)
-    inertia: list[float] = []
-    assigned = None
-    for _ in range(N_ITER):
-        assigned = _assign(emb, cents)
-        stats = (
-            assigned.join(emb, "vec_id")
-            .select("cell", "dist2", "v")
-            .groupBy("cell")
-            .agg(
-                F.count("*").alias("n"),
-                F.sum("dist2").alias("sse"),
-                F.array(
-                    *[
-                        F.sum(F.element_at("v", i + 1)).alias(f"s{i}")
-                        for i in range(cents.shape[1])
-                    ]
-                ).alias("sums"),
-            )
-            .collect()
-        )
-        inertia.append(float(sum(r.sse for r in stats)))
-        new = cents.copy()  # empty cells keep previous centroid
-        for r in stats:
-            new[r.cell] = np.array(r.sums, dtype=np.float64) / r.n
-        cents = new
-    return assigned, cents, inertia
 
 
 # --------------------------------------------------------------------------
 # Integer-exact Lloyd's over the int8-quantized corpus (round-4,
-# VERDICT r3 item 6). Same deterministic recipe as the float fit above,
-# but EVERY quantity is an integer: vectors are the symmetric int8
-# quantization (identical expression to operators/vector_ops.py, already
-# bit-reproduced by DuckDB), distances are bigint sums of squared int
-# diffs, and centroid updates are floor divisions. That makes the whole
+# VERDICT r3 item 6). EVERY quantity is an integer: vectors are the
+# symmetric int8 quantization (identical expression to
+# operators/vector_ops.py, already bit-reproduced by DuckDB), distances
+# are bigint sums of squared int diffs, and centroid updates are floor
+# divisions. That makes the whole
 # learned quantizer — init, every assignment, every update — exactly
 # replayable as (unrolled) SQL, which is what upgrades ann_ivf_kmeans
 # from a rows-only driver check to a full hash-certified one.
@@ -530,7 +465,7 @@ def kmeans_fit_int8(
     past the gate, per iteration: one narrow assignment pass carrying
     qv + one groupBy(cell) shuffle of O(k x dim) integer partial sums;
     the only driver-side action is the bounded k-row stats collect
-    (same shape as the float kmeans_fit above and MLlib's iteration).
+    (the same shape as MLlib's iteration).
     Centroid update is floor(sum / n) — floor division, exact in
     int64, mirrored exactly by the SQL oracle. Both paths produce
     bit-identical centroids.
@@ -597,10 +532,7 @@ def _kmeans_cells_oracle() -> str:
     "float fit to the integer-exact int8 fit (kmeans_fit_int8 — int8 "
     "vectors, bigint distances, floor-division updates, md5-seeded "
     "init) so the full iterative algorithm is hash-certified by an "
-    "unrolled-SQL DuckDB oracle instead of a rows-only check. The "
-    "float Lloyd variant remains as kmeans_fit for "
-    "embedding-centroid analytics, invariant-tested in "
-    "tests/test_kmeans.py.",
+    "unrolled-SQL DuckDB oracle instead of a rows-only check.",
     # VERDICT r13 #1c: the fit body (incl. the r13 driver-fit gate)
     # is shared module machinery — declare it so edits drift this
     # query's certified fingerprint

@@ -23,7 +23,8 @@ implementations:
    into [0, 2^B), so both dimensions contribute equally.
 2. Range-partition + sort WITHIN partitions by the z-key — contiguous
    z-ranges per file are what narrow the min-max boxes; a global sort
-   is never needed.
+   is never needed. tests/test_storage_layout.py writes the layout
+   that way; the package ships only the key.
 
 The whole key computation is deterministic integer arithmetic, so it
 is oracle-certifiable bit-for-bit; the layout effect is measured from
@@ -137,21 +138,3 @@ def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-
-def write_zordered(
-    df: DataFrame, path: str, a: str, b: str, n_files: int = 16
-) -> None:
-    """Rewrite `df` clustered by the z-order of already-normalized
-    integer expressions (a, b): range-partition on the key (contiguous
-    z-ranges per file — the property that narrows min-max boxes), sort
-    within partitions, drop the helper column. This is the
-    table-maintenance OPTIMIZE step — run per partition of a 100 TB
-    table, never as one global job."""
-    (
-        df.withColumn("_z", F.expr(zorder_expr_spark(a, b)))
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -3,8 +3,8 @@ opaque `binary` columns with typed metadata, processed by Arrow-batched
 Pandas UDFs (`mapInPandas`) — the Spark-side plumbing (schema,
 partitioning, UDF signature, batch shape) is real and oracle-tested;
 the actual codec step is STUBBED (no image/audio libs in this
-container) behind `decode_image` / `decode_audio`, which raise
-NotImplementedError unless the deterministic fake is requested.
+container) behind `decode_image`, which raises NotImplementedError
+unless the deterministic fake is requested.
 
 The driver testdata has no binary table, so `documents.text` is
 encoded to utf-8 bytes as the stand-in payload; everything downstream
@@ -47,16 +47,6 @@ def decode_image(blob: bytes, fake: bool = False) -> dict:
         "height": blob[1] % 64 + 1 if len(blob) > 1 else 1,
         "n_bytes": len(blob),
     }
-
-
-def decode_audio(blob: bytes, fake: bool = False) -> dict:
-    """STUB: real decode needs an audio lib not present here."""
-    if not fake:
-        raise NotImplementedError(
-            "audio decoding requires an audio library; not available in "
-            "this environment — use fake=True for the deterministic stub"
-        )
-    return {"sample_rate": 16000, "n_samples": len(blob) * 2, "n_bytes": len(blob)}
 
 
 BLOB_FEATURES_SCHEMA = (
@@ -197,7 +187,7 @@ def _resize_blobs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 # ASCII invariant (ADVICE r7): the Spark side indexes UTF-8 BYTES of
 # the blob while this oracle indexes CHARACTERS of the text (ascii(),
 # length(), substring()), and the same character/byte split exists in
-# decode_image/decode_audio's fake-dimension oracles above — the md5
+# decode_image's fake-dimension oracle above — the md5
 # equality is therefore byte-for-byte only while document text is pure
 # ASCII (1 char == 1 byte). The synthetic documents fixture IS pure
 # ASCII at every SF, and tests/test_similarity.py::

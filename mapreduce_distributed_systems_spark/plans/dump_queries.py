@@ -103,15 +103,13 @@ def update_cert_state() -> dict[str, dict]:
     definition, and the gate test can demand re-certification for any
     query whose tree fingerprint drifted from it.
 
-    Bootstrap caveat (round 7): the file is first created mid-round 7,
-    so recorded fingerprints are the round-7 tree's, not the
-    historical certification-time ones. Every known pre-bootstrap
-    drift (corpus_decontamination's r6 planted-shift change, plus the
-    round-7 edits to the curation/PII queries) is already queued at
-    the head of the r7 gate window, which restores consistency the
-    first time the r7 driver runs. From then on, regenerating at round
-    start BEFORE any code edit keeps recorded fingerprints equal to
-    the certified definitions."""
+    Run it at round open, after folding the driver's newest
+    CORRECTNESS json and BEFORE any code edit: a name whose green
+    round advances records the tree's fingerprint, which is the
+    certified definition only while no edit has landed. A change of
+    fn_fingerprint's scheme rewrites the recorded fingerprints once,
+    for the names whose old-scheme fingerprint still matches (see
+    ROADMAP.md, Next direction 1)."""
     state: dict[str, dict] = {}
     if os.path.exists(_CERT_STATE):
         with open(_CERT_STATE) as f:

@@ -8,14 +8,22 @@ exposes this registry through the driver contract
 
 Contract notes (driver compare is order-insensitive but exact):
 - every computed column is aliased identically in Spark and SQL;
-- floating-point aggregates are rounded in BOTH engines so the
-  emitted doubles are bit-identical despite different summation order;
+- floating-point aggregates are rounded in BOTH engines. That hides
+  most summation-order noise but not all of it: a sum that lands on a
+  half-unit tie can round apart (perfbench seed 108, TPC-H Q1
+  sum_disc_price .66 in Spark against .65 in DuckDB). Exact decimal
+  sums are ROADMAP.md Next direction 2;
 - top-k queries order with a deterministic tiebreak before LIMIT.
 """
 
 from __future__ import annotations
 
+import ast
+import hashlib
 import importlib
+import inspect
+import textwrap
+import types
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -79,14 +87,11 @@ class QuerySpec:
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline set
     doc: str = ""
-    # Callables whose SOURCE participates in fn_fingerprint alongside
-    # the registered callable's own (ADVICE r12 #2): when a query's
-    # certified semantics live partly in a shared module-level helper
-    # (the r12 _rrf_fuse factoring), declare it here so an edit to the
-    # helper drifts the fingerprint and the staleness gate demands a
-    # re-cert — instead of silently bypassing the machinery the old
-    # inline body protected. Opt-in: helpers covered by test_parity.py
-    # alone stay outside, exactly as before.
+    # Module-level functions whose code fn_fingerprint hashes next to
+    # the registered callable's own: declare a shared helper that
+    # carries part of the query's certified semantics, so an edit to
+    # it drifts the fingerprint and the staleness gate asks for a
+    # re-cert. Undeclared helpers are covered by test_parity.py only.
     helpers: tuple[Callable, ...] = field(default_factory=tuple)
 
 
@@ -277,37 +282,78 @@ def get_spec(name: str) -> QuerySpec:
     return _REGISTRY[name]
 
 
+def _def_dump(fn: Callable) -> str:
+    """ast.dump of fn's def without its decorators or any docstring,
+    nested ones included."""
+    fn_def = ast.parse(textwrap.dedent(inspect.getsource(fn))).body[0]
+    fn_def.decorator_list = []
+    for node in ast.walk(fn_def):
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+        ) and ast.get_docstring(node, clean=False) is not None:
+            del node.body[0]
+    return ast.dump(fn_def)
+
+
+_SCALARS = (int, float, str, bytes, bool, type(None))
+
+
+def _constant_repr(value: object) -> str | None:
+    """repr of a scalar, or of a tuple or set built only of scalars;
+    None for anything else. Set members are sorted: a frozenset's own
+    repr follows PYTHONHASHSEED."""
+    if isinstance(value, _SCALARS):
+        return repr(value)
+    if isinstance(value, (tuple, set, frozenset)):
+        parts = [_constant_repr(v) for v in value]
+        if None in parts:
+            return None
+        if isinstance(value, tuple):
+            return "(" + ", ".join(parts) + ",)"
+        return "{" + ", ".join(sorted(parts)) + "}"
+    return None
+
+
+def _named_constants(fn: Callable) -> list[str]:
+    """name=repr for every constant global that fn's code, nested code
+    objects included, names."""
+    names: set[str] = set()
+    codes = [fn.__code__]
+    while codes:
+        code = codes.pop()
+        names.update(code.co_names)
+        codes.extend(c for c in code.co_consts if isinstance(c, types.CodeType))
+    out = []
+    for name in sorted(names):
+        if name in fn.__globals__:
+            r = _constant_repr(fn.__globals__[name])
+            if r is not None:
+                out.append(f"{name}={r}")
+    return out
+
+
 def fn_fingerprint(spec: QuerySpec) -> str:
-    """Stable fingerprint of a query's observable definition: the
-    source of its callable plus its oracle SQL. cert_state.json
-    (written by plans/dump_queries at round close) records this next
-    to each query's newest green driver round; when the tree's
-    fingerprint no longer matches the recorded one, the query's
-    external certification no longer covers the code and
-    tests/test_registry_gate.py requires it back inside the gate
-    window. Function-source granularity (not whole-module) keeps
-    doc-only edits elsewhere in a module from forcing re-certs; shared
-    helpers a query calls are outside the fingerprint and covered by
-    test_parity.py every session. The @register decorator lines above
-    the def are stripped: bench flags, tags, and doc strings do not
-    change results, and flipping them must not demand a driver slot
-    (the oracle, which does, is hashed separately)."""
-    import hashlib
-    import inspect
+    """Fingerprint of what a query runs. cert_state.json (written by
+    plans/dump_queries) records it next to each query's newest green
+    driver round; when the tree's fingerprint no longer matches the
+    recorded one, the external certification no longer covers the code
+    and tests/test_registry_gate.py requires the query back inside the
+    gate window.
 
-    def _fn_src(fn) -> str:
-        src_lines = inspect.getsource(fn).splitlines(keepends=True)
-        first_def = next(
-            i for i, ln in enumerate(src_lines)
-            if ln.lstrip().startswith("def ")
-        )
-        return "".join(src_lines[first_def:])
-
-    src = _fn_src(spec.fn)
-    # declared helpers (ADVICE r12 #2): their source is part of the
-    # certified definition — an edit must drift the fingerprint
-    for helper in spec.helpers:
-        src += "\x00" + _fn_src(helper)
-    return hashlib.sha256(
-        (src + "\x00" + (spec.oracle or "")).encode()
-    ).hexdigest()
+    It hashes, for the registered callable and each declared helper
+    (QuerySpec.helpers), the ast.dump of the def with its decorators
+    and every docstring removed, plus name=repr of each scalar, tuple
+    or set global its code names (POSTING_CAP, BM25_K1, ...); then the
+    oracle SQL. Docstrings, comments, layout and the @register
+    arguments other than the oracle therefore never move it; a body
+    edit, a literal, a referenced module constant or a declared
+    helper's body does. Undeclared helpers are outside it and covered
+    by test_parity.py every session. ast.dump differs between Python
+    minor versions, so the recorded fingerprints belong to the
+    interpreter that wrote them (3.11)."""
+    parts: list[str] = []
+    for fn in (spec.fn, *spec.helpers):
+        parts.append(_def_dump(fn))
+        parts.extend(_named_constants(fn))
+    parts.append(spec.oracle or "")
+    return hashlib.sha256("\x00".join(parts).encode()).hexdigest()

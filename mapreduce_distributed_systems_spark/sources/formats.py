@@ -4,8 +4,8 @@ The reference reads text files and writes text files (A1/A7); a
 general engine needs the standard interchange formats with schema
 fidelity. Parquet is the canonical storage (columnar, pushdown,
 pruning); CSV/JSON are interchange sinks — schema must be re-applied
-on read (both are schemaless on disk), which these helpers make
-explicit rather than relying on inference.
+on read (both are schemaless on disk), so the writer pins the
+timestamp format a schema-applying reader parses back.
 
 Scale note: CSV/JSON scans parallelize by line-split and support
 column pruning only after parse — they are ingest/egress formats;
@@ -15,8 +15,7 @@ layered on it) first.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame
 
 TIMESTAMP_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
@@ -28,14 +27,3 @@ def write_table(df: DataFrame, path: str, fmt: str = "parquet") -> None:
     elif fmt == "json":
         w = w.option("timestampFormat", TIMESTAMP_FMT)
     w.format(fmt).save(path)
-
-
-def read_table_as(
-    spark: SparkSession, path: str, schema: StructType, fmt: str = "parquet"
-) -> DataFrame:
-    r = spark.read.schema(schema)
-    if fmt == "csv":
-        r = r.option("header", "true").option("timestampFormat", TIMESTAMP_FMT)
-    elif fmt == "json":
-        r = r.option("timestampFormat", TIMESTAMP_FMT)
-    return r.format(fmt).load(path)

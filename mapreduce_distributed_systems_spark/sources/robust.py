@@ -67,40 +67,6 @@ def read_json_tolerant(
     return r.schema(schema).json(path)
 
 
-def read_csv_tolerant(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    mode: str = "PERMISSIVE",
-    corrupt_col: str = CORRUPT_COL,
-    header: bool = True,
-) -> DataFrame:
-    """CSV twin of read_json_tolerant: malformed = wrong column count
-    or an un-castable field; PERMISSIVE captures the raw line."""
-    r = (
-        spark.read.option("mode", mode)
-        .option("header", str(header).lower())
-    )
-    if mode == "PERMISSIVE":
-        r = r.option("columnNameOfCorruptRecord", corrupt_col)
-        return r.schema(_with_corrupt_col(schema, corrupt_col)).csv(path)
-    return r.schema(schema).csv(path)
-
-
-def corrupt_audit(df: DataFrame, corrupt_col: str = CORRUPT_COL) -> DataFrame:
-    """One-line loss accounting over a PERMISSIVE read: total rows,
-    malformed rows, and the loss rate — the number an ingest pipeline
-    alerts on. Single streaming aggregate, no shuffle beyond the
-    final 1-row reduce."""
-    from pyspark.sql import functions as F
-
-    return df.agg(
-        F.count("*").alias("n_rows"),
-        F.count(corrupt_col).alias("n_corrupt"),
-        F.round(F.count(corrupt_col) / F.count("*"), 6).alias("corrupt_rate"),
-    )
-
-
 def read_parquet_merged(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read reconciling per-file schema drift into the union
     schema (absent columns null-filled). Planning cost is one footer

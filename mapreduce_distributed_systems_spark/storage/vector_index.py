@@ -405,26 +405,3 @@ def ann_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("cell")
     )
-
-
-def compact_ivf_index(spark: SparkSession, base_dir: str) -> str:
-    """Index maintenance after N appends: each append writes its own
-    files into every touched cell partition, so a long-lived index
-    accumulates generations x cells small files and the probe's
-    partition-pruned read degrades into many tiny opens. Compaction
-    reads the latest version THROUGH the manifest, clusters the code
-    lists by cell (one cell-keyed repartition, so the partitionBy
-    write emits ONE file per cell; rows never change), and commits
-    version+1 with the SAME centroids. Content-invisible by contract:
-    same (vec_id, qv, cell, gen) set, old version immutable for
-    in-flight readers / time travel — compact_snapshot's protocol
-    applied to the vector store. At 100 TB this runs per cell-range
-    with a per-range file budget."""
-    codes, cells, manifest = read_ivf_index(spark, base_dir)
-    return write_ivf_index(
-        codes.repartition("cell"),
-        cells,
-        base_dir,
-        meta={"compacted_from": manifest["version"]},
-        version=manifest["version"] + 1,
-    )

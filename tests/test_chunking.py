@@ -1,10 +1,9 @@
-"""Document chunking (staged r13/r14, operators/chunking.py): oracle
-parity for the chunk relation and the per-source dedup report, plus
-planted boundary cases pinning the windowing rule exactly."""
+"""Document chunking (operators/chunking.py): oracle parity for the
+chunk relation and the per-source dedup report over the documents
+table, plus planted boundary cases pinning the windowing rule
+exactly."""
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -15,29 +14,37 @@ from mapreduce_distributed_systems_spark.operators.chunking import (
     CHUNK_TOKENS,
     chunk_dedup_stats,
     chunk_relation,
-    doc_chunk_dedup,
-    doc_chunk_split,
 )
+from mapreduce_distributed_systems_spark.sources import load_table
 from tests.duck_oracle import compare_spark_vs_oracle
+
+
+def _doc_chunks(spark, sf_dir):
+    return chunk_relation(load_table(spark, sf_dir, "documents"))
+
+
+def _doc_chunk_stats(spark, sf_dir):
+    return chunk_dedup_stats(load_table(spark, sf_dir, "documents"))
 
 
 def test_chunk_split_matches_oracle(spark, sf_dir):
     compare_spark_vs_oracle(
-        doc_chunk_split(spark, sf_dir), CHUNK_SPLIT_ORACLE, sf_dir
+        _doc_chunks(spark, sf_dir), CHUNK_SPLIT_ORACLE, sf_dir
     )
 
 
 def test_chunk_dedup_matches_oracle(spark, sf_dir):
     compare_spark_vs_oracle(
-        doc_chunk_dedup(spark, sf_dir), CHUNK_DEDUP_ORACLE, sf_dir
+        _doc_chunk_stats(spark, sf_dir), CHUNK_DEDUP_ORACLE, sf_dir
     )
 
 
 def test_merged_chunking_is_exact_composition_of_both_legs(spark, sf_dir):
     """The registered rel-keyed doc_chunking (third registry-ceiling
-    merge) must slice back to the staged callables row-for-row — the
-    merge changed packaging, not semantics (the RRF-merge discipline
-    from tests/test_retrieval.py)."""
+    merge) must slice back to chunk_relation and chunk_dedup_stats
+    over the documents table row-for-row — the merge changed
+    packaging, not semantics (the RRF-merge discipline from
+    tests/test_retrieval.py)."""
     from mapreduce_distributed_systems_spark.plans.registry import get_spec
 
     rows = get_spec("doc_chunking").fn(spark, sf_dir).collect()
@@ -49,7 +56,7 @@ def test_merged_chunking_is_exact_composition_of_both_legs(spark, sf_dir):
         if r.rel == "chunk"
     )
     want_chunk = sorted(
-        tuple(r) for r in doc_chunk_split(spark, sf_dir).collect()
+        tuple(r) for r in _doc_chunks(spark, sf_dir).collect()
     )
     assert got_chunk == want_chunk
 
@@ -60,7 +67,7 @@ def test_merged_chunking_is_exact_composition_of_both_legs(spark, sf_dir):
         if r.rel == "stats"
     )
     want_stats = sorted(
-        tuple(r) for r in doc_chunk_dedup(spark, sf_dir).collect()
+        tuple(r) for r in _doc_chunk_stats(spark, sf_dir).collect()
     )
     assert got_stats == want_stats
     # and the off-leg columns are NULL, never garbage
@@ -194,7 +201,7 @@ def test_split_plan_is_narrow(spark, sf_dir):
     """The chunk relation must be a map-only plan: no exchange
     anywhere (tokenize -> sequence/slice -> explode -> project)."""
     plan = (
-        doc_chunk_split(spark, sf_dir)
+        _doc_chunks(spark, sf_dir)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -205,7 +212,7 @@ def test_split_plan_is_narrow(spark, sf_dir):
 def test_zero_token_docs_yield_no_chunks(spark, sf_dir):
     """Parquet-backed twin of the planted L=0 case: no chunk row may
     have 0 tokens, and every doc with >= 1 letter-run appears."""
-    rel = doc_chunk_split(spark, sf_dir)
+    rel = _doc_chunks(spark, sf_dir)
     assert rel.where(F.col("n_tokens") < 1).count() == 0
 
 

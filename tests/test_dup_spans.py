@@ -11,7 +11,6 @@ from mapreduce_distributed_systems_spark.operators.dup_spans import (
     DUP_NGRAM_K,
     DUP_NGRAM_MASS_ORACLE,
     doc_dup_ngram_mass,
-    dup_ngram_instances,
     dup_ngram_mass,
 )
 from tests.duck_oracle import compare_spark_vs_oracle
@@ -81,18 +80,6 @@ def test_all_unique_corpus_has_zero_dup_mass(spark):
     out = dup_ngram_mass(_docs(spark, [(7, "s", text)])).collect()[0]
     assert out.ngrams_dup == 0
     assert out.dup_frac == 0.0
-
-
-def test_instance_table_keeps_positional_duplicates(spark):
-    """The instance stream must keep one row per POSITION — collapsing
-    to distinct sids would undercount within-doc repeats."""
-    span = " ".join(_w("w", i) for i in range(DUP_NGRAM_K))
-    text = span + " xSep " + span
-    inst = dup_ngram_instances(
-        spark.createDataFrame([(1, text)], "doc_id long, text string")
-    )
-    assert inst.count() == DUP_NGRAM_K + 2
-    assert inst.select("sid").distinct().count() == DUP_NGRAM_K + 1
 
 
 def test_plan_has_no_sid_keyed_join(spark, sf_dir):

@@ -9,7 +9,7 @@ import pytest
 
 from mapreduce_distributed_systems_spark.sources import load_table
 from mapreduce_distributed_systems_spark.sources.formats import (
-    read_table_as,
+    TIMESTAMP_FMT,
     write_table,
 )
 
@@ -24,7 +24,12 @@ def test_roundtrip_orders(spark, sf_dir, fmt):
     orders = load_table(spark, sf_dir, "orders")
     path = tempfile.mkdtemp(prefix=f"fmt_{fmt}_") + "/orders"
     write_table(orders, path, fmt)
-    back = read_table_as(spark, path, orders.schema, fmt)
+    r = spark.read.schema(orders.schema).option(
+        "timestampFormat", TIMESTAMP_FMT
+    )
+    if fmt == "csv":
+        r = r.option("header", "true")
+    back = r.format(fmt).load(path)
     assert back.schema == orders.schema
     assert _rows(back) == _rows(orders)
 

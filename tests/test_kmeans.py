@@ -1,11 +1,11 @@
-"""k-means invariants (no SQL oracle possible for an iterative
-algorithm): determinism, monotone inertia, complete assignment."""
+"""Integer k-means invariants the unrolled-SQL oracles cannot reach:
+the fit-sample lever, the driver-side fit against the distributed
+loop, and the two-level (coarse-quantizer) router."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_distributed_systems_spark.operators.kmeans import K, kmeans_fit
 from mapreduce_distributed_systems_spark.sources import load_table
 
 
@@ -13,27 +13,6 @@ def _emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-
-
-def test_kmeans_deterministic(spark, sf_dir):
-    a1, c1, i1 = kmeans_fit(_emb(spark, sf_dir))
-    a2, c2, i2 = kmeans_fit(_emb(spark, sf_dir))
-    assert i1 == i2
-    assert (c1 == c2).all()
-    r1 = sorted((r.vec_id, r.cell) for r in a1.collect())
-    r2 = sorted((r.vec_id, r.cell) for r in a2.collect())
-    assert r1 == r2
-
-
-def test_kmeans_inertia_monotone_and_assignment_complete(spark, sf_dir):
-    emb = _emb(spark, sf_dir)
-    assigned, cents, inertia = kmeans_fit(emb)
-    # Lloyd's algorithm never increases inertia
-    assert all(b <= a + 1e-9 for a, b in zip(inertia, inertia[1:])), inertia
-    rows = assigned.collect()
-    assert len(rows) == emb.count()  # every vector assigned exactly once
-    assert {r.cell for r in rows} <= set(range(K))
-    assert cents.shape == (K, 64)
 
 
 def test_int8_fit_sample_lever(spark, sf_dir):

@@ -1,6 +1,6 @@
-"""Error-path contracts (ROADMAP #10): tolerant JSON/CSV reads with
-in-band corrupt-record capture, loss accounting, strict-mode failure,
-and parquet schema-drift reconciliation. The reference worker aborts
+"""Error-path contracts (ROADMAP #10): tolerant JSON reads with
+in-band corrupt-record capture, strict-mode failure, and parquet
+schema-drift reconciliation. The reference worker aborts
 on any input problem (mr/worker.go:166-173); at scale the engine must
 instead parse tolerantly and ACCOUNT the loss — these tests pin that
 behavior on real files."""
@@ -20,8 +20,6 @@ from pyspark.sql.types import (
 
 from mapreduce_distributed_systems_spark.sources.robust import (
     CORRUPT_COL,
-    corrupt_audit,
-    read_csv_tolerant,
     read_json_tolerant,
     read_parquet_merged,
 )
@@ -58,8 +56,6 @@ def test_json_permissive_captures_corrupt_lines(spark, json_path):
     assert corrupt == sorted([JSON_LINES[2], JSON_LINES[3]])  # raw lines
     clean = sorted((r.id, r.k, r.name) for r in rows if not r[CORRUPT_COL])
     assert clean == [(1, 10, "a"), (2, 20, "b"), (5, 50, "e")]
-    audit = corrupt_audit(df).head()
-    assert (audit.n_rows, audit.n_corrupt, audit.corrupt_rate) == (5, 2, 0.4)
 
 
 def test_json_dropmalformed_and_failfast(spark, json_path):
@@ -71,28 +67,6 @@ def test_json_dropmalformed_and_failfast(spark, json_path):
         read_json_tolerant(
             spark, json_path, SCHEMA, mode="FAILFAST"
         ).collect()
-
-
-def test_csv_permissive_wrong_arity_and_bad_cast(spark, tmp_path):
-    p = tmp_path / "in.csv"
-    p.write_text(
-        "id,k,name\n"
-        "1,10,a\n"
-        "2,notanint,b\n"  # un-castable field
-        "3,30\n"  # short row (arity mismatch)
-        "4,40,d\n"
-    )
-    df = read_csv_tolerant(spark, str(p), SCHEMA).cache()
-    rows = df.collect()
-    assert len(rows) == 4  # nothing dropped, nothing failed
-    corrupt = sorted(r[CORRUPT_COL] for r in rows if r[CORRUPT_COL])
-    # both failure shapes captured raw: bad cast AND wrong arity
-    assert corrupt == ["2,notanint,b", "3,30"]
-    bad_cast = next(r for r in rows if r[CORRUPT_COL] == "2,notanint,b")
-    assert bad_cast.id == 2 and bad_cast.k is None  # field nulled,
-    # parseable prefix retained alongside the raw line
-    clean = sorted((r.id, r.k, r.name) for r in rows if not r[CORRUPT_COL])
-    assert clean == [(1, 10, "a"), (4, 40, "d")]
 
 
 def test_parquet_schema_drift_merges_and_prunes(spark, tmp_path):

@@ -6,7 +6,6 @@ from __future__ import annotations
 import pytest
 
 from mapreduce_distributed_systems_spark.operators.multimodal import (
-    decode_audio,
     decode_image,
 )
 from mapreduce_distributed_systems_spark.plans.registry import get_spec
@@ -193,8 +192,6 @@ def test_ivf_cell_formula_bounds_cell_size():
 def test_decode_stubs_raise_without_fake():
     with pytest.raises(NotImplementedError):
         decode_image(b"abc")
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"abc")
 
 
 def test_fake_decode_deterministic():

@@ -95,7 +95,7 @@ def test_zorder_layout_skips_files_on_both_dimensions(spark, sf_dir):
 
     from mapreduce_distributed_systems_spark.operators.layout import (
         _NB,
-        write_zordered,
+        zorder_expr_spark,
     )
     from mapreduce_distributed_systems_spark.sources import load_table
 
@@ -119,7 +119,16 @@ def test_zorder_layout_skips_files_on_both_dimensions(spark, sf_dir):
     # range-normalized buckets, exactly as the certified query builds
     ub = f"(((user_id - {lo_u}) * {_NB}) div ({hi_u - lo_u} + 1))"
     hb = f"(((ts_s - {lo_t}) * {_NB}) div ({hi_t - lo_t} + 1))"
-    write_zordered(ev, f"{base}/zorder", a=ub, b=hb, n_files=n_files)
+    # the maintenance rewrite: range-partition on the z-key (contiguous
+    # z-ranges per file), sort within partitions, drop the key
+    (
+        ev.withColumn("_z", F.expr(zorder_expr_spark(ub, hb)))
+        .repartitionByRange(n_files, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .parquet(f"{base}/zorder")
+    )
 
     def file_ranges(path):
         out = []

@@ -131,8 +131,12 @@ def _append_in(spark, sf_dir, base):
 def test_append_preserves_base_codes_and_centroids(spark, sf_dir):
     """The incremental append (ann_ivf_index_append) must (a) cover
     the whole corpus across the two generations, (b) leave version 1
-    resolvable with exactly the base codes, and (c) serve version 2
-    with the SAME centroid table — frozen, not refit."""
+    resolvable with exactly the base codes, (c) serve version 2
+    with the SAME centroid table — frozen, not refit, and (d) write
+    one data file per cell partition, because write_ivf_index
+    repartitions by cell (the small-files fix)."""
+    import glob
+
     from mapreduce_distributed_systems_spark.sources import load_table
 
     base = tempfile.mkdtemp(prefix="ivf_append_test_")
@@ -159,6 +163,13 @@ def test_append_preserves_base_codes_and_centroids(spark, sf_dir):
     assert sorted((r.cell, tuple(r.cv)) for r in cells_v2.collect()) == sorted(
         (r.cell, tuple(r.cv)) for r in cells_v1.collect()
     )
+    # (d) one file per cell in both versions
+    for version in (1, 2):
+        files = glob.glob(f"{base}/codes-{version:03d}/*/*.parquet")
+        cells_of = [f.split("/cell=")[1].split("/")[0] for f in files]
+        assert cells_of and len(cells_of) == len(set(cells_of)), (
+            f"multi-file cell in version {version}"
+        )
 
 
 def test_append_without_arrow_matches(spark, sf_dir):
@@ -205,46 +216,3 @@ def test_read_ivf_index_starts_no_job(spark, jobs_started):
     assert sorted((r.vec_id, tuple(r.qv), r.cell) for r in codes2.collect()) == [
         (1, (1, -2), 0), (2, (3, 4), 1), (3, (0, 5), 1)
     ]
-
-
-def test_compaction_is_content_invisible_and_merges_files(spark, sf_dir):
-    """compact_ivf_index after an append: identical (vec_id, qv, cell,
-    gen) content, no more than one data file per cell, same centroids,
-    old versions still resolvable — the compact_snapshot contract on
-    the vector store. Since round 8 write_ivf_index itself repartitions
-    by cell (one task per cell => one file per cell, the 100x
-    small-files fix), so the ordinary write already satisfies the
-    compacted layout and compaction's job is re-establishing it after
-    out-of-band fragmentation; this pins both the content invariance
-    and the one-file-per-cell layout on BOTH versions."""
-    import glob
-
-    from mapreduce_distributed_systems_spark.storage.vector_index import (
-        compact_ivf_index,
-    )
-
-    # build a fragmented index: the registered append query leaves a
-    # 2-generation version 2 behind in its own tempdir, so rebuild the
-    # same shape here to know base_dir
-    base = tempfile.mkdtemp(prefix="ivf_compact_")
-    _append_in(spark, sf_dir, base)
-
-    before, cells_b, m2 = read_ivf_index(spark, base)
-    files_before = glob.glob(f"{base}/codes-002/*/*.parquet")
-    compact_ivf_index(spark, base)
-    after, cells_a, m3 = read_ivf_index(spark, base)
-    assert m3["version"] == 3 and m3["compacted_from"] == 2
-    files_after = glob.glob(f"{base}/codes-003/*/*.parquet")
-    assert len(files_after) <= len(files_before)
-    # one file per cell, both pre- and post-compaction (r8 write fix)
-    for files in (files_before, files_after):
-        cells_of = [f.split("/cell=")[1].split("/")[0] for f in files]
-        assert len(cells_of) == len(set(cells_of)), "multi-file cell"
-    key = lambda r: (r.vec_id, tuple(r.qv), int(r.cell), r.gen)  # noqa: E731
-    assert {key(r) for r in after.collect()} == {key(r) for r in before.collect()}
-    assert {(r.cell, tuple(r.cv)) for r in cells_a.collect()} == {
-        (r.cell, tuple(r.cv)) for r in cells_b.collect()
-    }
-    # superseded version still reads (time travel across compactions)
-    v2, _, _ = read_ivf_index(spark, base, version=2)
-    assert v2.count() == after.count()

@@ -9,8 +9,11 @@ Reads, in this priority order:
   1. never-certified queries (no green row in any git-COMMITTED
      CORRECTNESS_r*.json) — MUST be in the window
      (test_all_never_certified_queries_...)
-  2. changed-fingerprint queries (tree fingerprint differs from the
-     certified one in plans/cert_state.json) — MUST be in the window
+  2. changed-fingerprint queries: the tree's fn_fingerprint (the code
+     the query and its declared helpers run, the constants that code
+     names, and the oracle SQL; docstrings and comments excluded)
+     differs from the one plans/cert_state.json recorded at the
+     query's newest green round — MUST be in the window
      (test_changed_queries_queued_in_window)
   3. hard-stale queries (newest green row > 3 rounds older than the
      newest committed CORRECTNESS round) — MUST be in the window
